@@ -156,7 +156,8 @@ def main():
     try:
         rc = run_jvm(java_cmd([jar] + jars,
                               [a.workload, str(a.seed), str(a.seconds), str(a.trace), work,
-                               ARTIFACTS, result_file], work), work, RUN_TIMEOUT_S)
+                               ARTIFACTS, result_file,
+                               os.path.basename(jar)[:-len(".jar")]], work), work, RUN_TIMEOUT_S)
         if rc != 0 or not os.path.isfile(result_file):
             sys.stderr.write(open(os.path.join(work, "jvm.log"), errors="replace").read()[-6000:])
             fail("run timed out" if rc is None else "run exited with code %s" % rc)

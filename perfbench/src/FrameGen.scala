@@ -27,19 +27,56 @@ import graft.model.{EventModel, ProtoDescriptors}
   */
 object FrameGen {
 
-  /** One workload's input shape: short apps live a few files and close
-    * with a STATE END and emit [[SmallMix]]; `longApps` long-lived apps
-    * emit `largeMix` for `largeShare` of the frames and never end.
+  /** One workload's population: `shortApps` short MapReduce apps (2–4
+    * containers each) that live `ShortAppLifeFiles` files on average and
+    * close with a STATE END, and `longApps` long-lived Spark apps with
+    * `executors` containers each that never end. Each frame's source is
+    * drawn in proportion to the [[Rates]] of the live population.
     */
-  final case class Profile(largeShare: Double, largeMix: Seq[(String, Double)],
-                           shortApps: Int, longApps: Int)
+  final case class Profile(shortApps: Int, longApps: Int, executors: Int)
 
-  val SmallMix: Seq[(String, Double)] = Seq("CONTAINER_MONITORING_EVENT" -> 0.40,
-    "FS_EVENT" -> 0.30, "GC_EVENT" -> 0.18, "STATE_EVENT" -> 0.12)
+  /** Emission rates, events per second. From BASELINE.md (the reference's
+    * README): container monitoring 2 per container per NodeManager monitor
+    * interval (YARN's default interval is 3 s); JVM stats 1 per 10 s per
+    * JVM as configured, 1 per minute at the library default; application
+    * state 1 per 10 s per running app. The reference publishes no rate for
+    * the rest, so these are assumptions: FS 1 per 3 s per container, GC 1
+    * per 10 s per JVM, and per Spark executor 1 task end per second with a
+    * stage every 4 tasks (one stage event, two stage-state events).
+    */
+  object Rates {
+    val ContainerMonitoring: Double = 2.0 / 3
+    val JvmStatsConfigured: Double = 1.0 / 10
+    val JvmStatsDefault: Double = 1.0 / 60
+    val AppState: Double = 1.0 / 10
+    val Fs: Double = 1.0 / 3
+    val Gc: Double = 1.0 / 10
+    val SparkTask: Double = 1.0
+    val SparkStage: Double = SparkTask / 4
+    val SparkStageState: Double = 2 * SparkStage
+  }
+
+  /** Per-container mixes. Short apps' JVMs run the agent at its library
+    * default JVM-stats period, Spark executors at the configured one.
+    */
+  val ShortContainerMix: Seq[(String, Double)] = Seq(
+    "CONTAINER_MONITORING_EVENT" -> Rates.ContainerMonitoring, "FS_EVENT" -> Rates.Fs,
+    "GC_EVENT" -> Rates.Gc, "JVMSTATS_EVENT" -> Rates.JvmStatsDefault)
+  val ExecutorMix: Seq[(String, Double)] = Seq(
+    "CONTAINER_MONITORING_EVENT" -> Rates.ContainerMonitoring, "FS_EVENT" -> Rates.Fs,
+    "GC_EVENT" -> Rates.Gc, "JVMSTATS_EVENT" -> Rates.JvmStatsConfigured,
+    "SPARK_TASK_EVENT" -> Rates.SparkTask, "SPARK_STAGE_EVENT" -> Rates.SparkStage,
+    "SPARK_STAGE_STATE_EVENT" -> Rates.SparkStageState)
+
   /** One frame file per `FileMs` of event time (and of open-loop schedule). */
   val FileMs = 100
-  /** Mean short-app lifetime, in files. */
-  val ShortAppLifeFiles = 8
+  /** Mean short-app lifetime, in files. The reference's churn (~25 M
+    * containers a day against ~45 k events/s, so ~155 events per container)
+    * would make app starts and ends ~0.4 % of the frames; 7.5 s lifetimes
+    * make them ~12 % on `ingest_small`, so that a run closes about 100
+    * sessions.
+    */
+  val ShortAppLifeFiles = 75
   // known shares of the frames (and of the apps, for UnknownAppShare)
   val UnknownAppShare = 0.2
   val CorruptShare = 0.01
@@ -59,7 +96,8 @@ object FrameGen {
     * output checks need.
     */
   final case class Ledger(files: IndexedSeq[FileInfo], factsEnriched: Long, factsAll: Long,
-                          appsEnded: Int, sessionEvents: Long) {
+                          appsEnded: Int, sessionEvents: Long,
+                          rowsByApp: Map[(String, String, String), Long]) {
     def frames: Long = files.map(_.frames.toLong).sum
     def bytes: Long = files.map(_.bytes).sum
     def perType: Map[String, Long] = sumMaps(files.map(_.perType))
@@ -75,7 +113,10 @@ object FrameGen {
                                containers: IndexedSeq[String], var filesLeft: Int,
                                var started: Boolean = false)
 
-  private final case class Sent(bytes: Array[Byte], tpe: String, known: Boolean)
+  /** A valid frame sent: `sub` is the body's kind where the panels
+    * select on it (resource type, state), else empty.
+    */
+  private final case class Sent(bytes: Array[Byte], tpe: String, app: App, sub: String)
 
   private val schema = MessageTypeParser.parseMessageType(
     "message frames { required binary value; required int64 offset; }")
@@ -86,11 +127,6 @@ object FrameGen {
   val collectors: Seq[String] = Seq("G1 Young Generation", "G1 Old Generation", "PS Scavenge")
 
   private def pick[A](r: SplittableRandom, xs: Seq[A]): A = xs(r.nextInt(xs.length))
-
-  private def weighted(r: SplittableRandom, mix: Seq[(String, Double)]): String = {
-    var u = r.nextDouble() * mix.map(_._2).sum
-    mix.find { case (_, w) => u -= w; u < 0 }.getOrElse(mix.last)._1
-  }
 
   private def header(app: App, container: String): Array[Byte] =
     ProtoDescriptors.header.encode(Seq(
@@ -108,10 +144,38 @@ object FrameGen {
     sb.toString
   }
 
-  private def body(r: SplittableRandom, tpe: String, app: App, state: String): Array[Byte] = tpe match {
+  /** The body's kind, for the types whose bodies the panels select on. */
+  private def subOf(r: SplittableRandom, tpe: String): String = tpe match {
+    case "CONTAINER_MONITORING_EVENT" => if (r.nextInt(3) == 0) "VCORE" else "MEMORY"
+    case "SPARK_STAGE_STATE_EVENT" => if (r.nextBoolean()) "BEGIN" else "COMPLETED"
+    case "STATE_EVENT" => "RUNNING"
+    case _ => ""
+  }
+
+  /** Stack-trace lengths of failed Spark tasks: 9 % of task and stage
+    * events carry one, log-uniform in [1 KB, 300 KB], which puts the type's
+    * p99 near 158 KB. Both draws follow additive recurrences from seeded
+    * starts rather than independent draws, so that the tail is spread
+    * evenly over an input set instead of clumping by chance.
+    */
+  private final class StackTraces(r: SplittableRandom) {
+    private var failDraw = r.nextDouble()
+    private var sizeDraw = r.nextDouble()
+    /** The next event's stack-trace length, 0 when it did not fail. */
+    def next(): Int = {
+      failDraw = (failDraw + 0.6180339887498949) % 1.0
+      if (failDraw >= 0.09) 0
+      else {
+        sizeDraw = (sizeDraw + 0.7548776662466927) % 1.0
+        math.exp(math.log(1024) + sizeDraw * (math.log(300 * 1024) - math.log(1024))).toInt
+      }
+    }
+  }
+
+  private def body(r: SplittableRandom, tpe: String, app: App, sub: String,
+                   traces: StackTraces): Array[Byte] = tpe match {
     case "CONTAINER_MONITORING_EVENT" =>
-      ProtoDescriptors.containerResourceEvent.encode(Seq(
-        if (r.nextInt(3) == 0) "VCORE" else "MEMORY", 4096L + r.nextInt(8) * 1024L,
+      ProtoDescriptors.containerResourceEvent.encode(Seq(sub, 4096L + r.nextInt(8) * 1024L,
         (r.nextInt(4096) + 1).toFloat))
     case "FS_EVENT" =>
       val path = "/user/" + app.user + "/warehouse/" + text(r, 280 + r.nextInt(300))
@@ -122,7 +186,7 @@ object FrameGen {
       ProtoDescriptors.gcStatisticsData.encode(Seq(pick(r, collectors), (r.nextInt(300) + 1).toLong,
         "Allocation Failure", 1L << 20, 1L << 10, 0L, 0L, 1L << 22, 1L << 21,
         0L, 0L, 0L, 0L, r.nextInt(100).toFloat / 100f))
-    case "STATE_EVENT" => ProtoDescriptors.stateEvent.encode(Seq(state))
+    case "STATE_EVENT" => ProtoDescriptors.stateEvent.encode(Seq(sub))
     case "APPLICATION_EVENT" =>
       ProtoDescriptors.applicationEvent.encode(Seq("RUNNING", "default", "", "",
         Seq("team:" + app.user), app.containers.head, "proj", "wf", 0L, 0L, "", 0L, 0L))
@@ -137,11 +201,9 @@ object FrameGen {
         Seq("os", (0 until 46).map(i => Seq(s"metric_property_$i", s"${r.nextLong() & 0xffffffffffL}"))))
       ProtoDescriptors.jvmStatisticsData.encode(Seq(sections))
     case "SPARK_TASK_EVENT" | "SPARK_STAGE_EVENT" =>
-      // heavy tail: ~9 % failed tasks carry a stack trace, log-uniform in
-      // [1 KB, 300 KB], which puts the type's p99 near 158 KB
-      val failed = r.nextDouble() < 0.09
-      val reason = if (failed) text(r, math.exp(math.log(1024) + r.nextDouble() *
-        (math.log(300 * 1024) - math.log(1024))).toInt) else ""
+      val trace = traces.next()
+      val failed = trace > 0
+      val reason = if (failed) text(r, trace) else ""
       val metrics = Seq.fill(25)((r.nextInt(1 << 20) + 1).toLong)
       val stage = s"${r.nextInt(40)}"
       if (tpe == "SPARK_TASK_EVENT")
@@ -152,8 +214,8 @@ object FrameGen {
         ProtoDescriptors.sparkStageEvent.encode(Seq(1000L + r.nextInt(100000),
           s"stage-$stage", stage, "0", 8 + r.nextInt(200), "COMPLETED", reason) ++ metrics)
     case "SPARK_STAGE_STATE_EVENT" =>
-      ProtoDescriptors.sparkStageStateEvent.encode(Seq(if (r.nextBoolean()) "BEGIN" else "COMPLETED",
-        s"stage-${r.nextInt(40)}", s"${r.nextInt(40)}", "0", 8 + r.nextInt(200)))
+      ProtoDescriptors.sparkStageStateEvent.encode(Seq(sub, s"stage-${r.nextInt(40)}",
+        s"${r.nextInt(40)}", "0", 8 + r.nextInt(200)))
   }
 
   private def frame(tpe: String, ts: Long, h: Array[Byte], b: Array[Byte]): Array[Byte] =
@@ -185,10 +247,10 @@ object FrameGen {
   }
 
   /** Generate `nFiles` frame files into `dir` (named `f-%06d.parquet`),
-    * each with `framesPerFile` frames plus the app-lifecycle frames (one
-    * APPLICATION_EVENT per starting app, one STATE END per ending app). Event time
-    * starts at `baseTs` and advances `FileMs` per file. `tag` keeps app
-    * ids distinct between the input sets of one run. Files are timed in
+    * each with `framesPerFile` frames, the app-lifecycle frames (one
+    * APPLICATION_EVENT per starting app, one STATE END per ending app)
+    * included. Event time starts at `baseTs` and advances `FileMs` per
+    * file. `tag` keeps app ids distinct between the input sets of one run. Files are timed in
     * `chunks` equal groups; the group times (seconds) are returned.
     */
   def generate(p: Profile, seed: Long, tag: String, dir: String, nFiles: Int,
@@ -201,7 +263,8 @@ object FrameGen {
       appSeq += 1
       val id = s"application_${tag}_${seed}_$appSeq"
       App(id, pick(r, users), known = r.nextDouble() >= UnknownAppShare, long,
-        (1 to 2 + r.nextInt(3)).map(c => f"container_${tag}_${seed}_${appSeq}_$c%06d"),
+        (1 to (if (long) p.executors else 2 + r.nextInt(3)))
+          .map(c => f"container_${tag}_${seed}_${appSeq}_$c%06d"),
         if (long) Int.MaxValue else 1 + r.nextInt(2 * ShortAppLifeFiles))
     }
     val shortApps = ArrayBuffer.fill(p.shortApps)(newApp(long = false))
@@ -211,6 +274,8 @@ object FrameGen {
     val lateApp = App(s"application_${tag}_${seed}_late", "user_late", known = false,
       long = true, IndexedSeq(s"container_${tag}_${seed}_late_000001"), Int.MaxValue, started = true)
     var factsEnriched = 0L; var factsAll = 0L; var ended = 0; var sessionEvents = 0L
+    val rowsByApp = scala.collection.mutable.Map.empty[(String, String, String), Long].withDefaultValue(0L)
+    val traces = new StackTraces(r)
     val recent = ArrayBuffer.empty[Sent]
     var offset = firstOffset
     val perChunk = math.max(1, (nFiles + chunks - 1) / chunks)
@@ -228,17 +293,20 @@ object FrameGen {
       // APPLICATION_EVENT; it is enriched iff its app sent one first
       def account(s: Sent): Unit = {
         perType(s.tpe) += 1
+        rowsByApp((s.app.id, s.tpe, s.sub)) += 1
         if (s.tpe != "APPLICATION_EVENT") {
           factsAll += 1
-          if (s.known) factsEnriched += 1
+          if (s.app.known) factsEnriched += 1
         }
         if (SessionTypes(s.tpe)) sessionEvents += 1
       }
-      def emit(tpe: String, f: Array[Byte], app: App, mayCorrupt: Boolean): Unit = {
+      def emit(tpe: String, ts: Long, app: App, container: String, sub: String,
+               mayCorrupt: Boolean): Unit = {
+        val f = frame(tpe, ts, header(app, container), body(r, tpe, app, sub, traces))
         if (mayCorrupt && r.nextDouble() < CorruptShare) {
           out += corrupt(f); perType(tpe) += 1; corruptPerType(tpe) += 1
         } else {
-          val s = Sent(f, tpe, app.known)
+          val s = Sent(f, tpe, app, sub)
           out += f; account(s)
           // STATE frames are never re-sent: a duplicate END would be a
           // second close, which the reference's reader cannot tell apart
@@ -252,10 +320,24 @@ object FrameGen {
       // before every fact of the app in event time
       (shortApps ++ longApps).filter(!_.started).foreach { a =>
         a.started = true
-        if (a.known) emit("APPLICATION_EVENT", frame("APPLICATION_EVENT", fileStart,
-          header(a, a.containers.head), body(r, "APPLICATION_EVENT", a, "")), a, mayCorrupt = false)
+        if (a.known) emit("APPLICATION_EVENT", fileStart, a, a.containers.head, "", mayCorrupt = false)
       }
-      var slots = 0
+      // every (app, container, type) of the live population, weighted by
+      // its emission rate; STATE is per app
+      val sources = (shortApps.toSeq ++ longApps).flatMap { a =>
+        (if (a.long) ExecutorMix else ShortContainerMix).flatMap { case (t, rate) =>
+          a.containers.map(c => (a, c, t, rate))
+        } :+ ((a, a.containers.head, "STATE_EVENT", Rates.AppState))
+      }.toIndexedSeq
+      val cum = sources.scanLeft(0.0)(_ + _._4).tail.toArray
+      def draw(): (App, String, String) = {
+        val i = java.util.Arrays.binarySearch(cum, r.nextDouble() * cum.last)
+        val s = sources(math.min(if (i >= 0) i + 1 else -i - 1, sources.length - 1))
+        (s._1, s._2, s._3)
+      }
+      // the lifecycle frames take their slots out of the file's budget
+      val ending = shortApps.count(_.filesLeft <= 1)
+      var slots = out.length + ending
       while (slots < framesPerFile) {
         slots += 1
         val u = r.nextDouble()
@@ -269,14 +351,10 @@ object FrameGen {
         } else if (u < UnknownMarkerShare + DupShare + LateShare) {
           val tpe = if (r.nextBoolean()) "FS_EVENT" else "CONTAINER_MONITORING_EVENT"
           val late = baseTs - 27L * 3600000L - r.nextInt(3 * 3600000)
-          emit(tpe, frame(tpe, late, header(lateApp, lateApp.containers.head),
-            body(r, tpe, lateApp, "")), lateApp, mayCorrupt = true)
+          emit(tpe, late, lateApp, lateApp.containers.head, subOf(r, tpe), mayCorrupt = true)
         } else {
-          val large = longApps.nonEmpty && r.nextDouble() < p.largeShare
-          val app = if (large) pick(r, longApps) else pick(r, shortApps.toSeq)
-          val tpe = weighted(r, if (large) p.largeMix else SmallMix)
-          emit(tpe, frame(tpe, ts(), header(app, pick(r, app.containers)),
-            body(r, tpe, app, "RUNNING")), app, mayCorrupt = true)
+          val (app, container, tpe) = draw()
+          emit(tpe, ts(), app, container, subOf(r, tpe), mayCorrupt = true)
         }
       }
       // app ends: a short app whose lifetime is over sends STATE END as
@@ -285,8 +363,7 @@ object FrameGen {
         val a = shortApps(j)
         a.filesLeft -= 1
         if (a.filesLeft <= 0) {
-          emit("STATE_EVENT", frame("STATE_EVENT", fileStart + FileMs - 1,
-            header(a, a.containers.head), body(r, "STATE_EVENT", a, "END")), a, mayCorrupt = false)
+          emit("STATE_EVENT", fileStart + FileMs - 1, a, a.containers.head, "END", mayCorrupt = false)
           ended += 1; endedHere += 1
           shortApps(j) = newApp(long = false)
         }
@@ -302,6 +379,6 @@ object FrameGen {
       FileInfo(name, out.length, out.map(_.length.toLong).sum, perType.toMap,
         corruptPerType.toMap, unknown, endedHere)
     }
-    (Ledger(infos, factsEnriched, factsAll, ended, sessionEvents), chunkTimes.toSeq)
+    (Ledger(infos, factsEnriched, factsAll, ended, sessionEvents, rowsByApp.toMap), chunkTimes.toSeq)
   }
 }

@@ -29,7 +29,8 @@ import graft.streaming.{EventRouter, EventSink, IngestLagListener, Sessionizer, 
   * functions; the benchmark only generates input, times and checks.
   *
   * Usage: `PipelineBench <workload> <seed> <seconds> <trace 0|1> <workDir>
-  * <artifactDir> <resultFile>`.
+  * <artifactDir> <resultFile> <build>`, where `build` names the compiled
+  * sources (the runner passes their hash).
   */
 object PipelineBench {
 
@@ -53,19 +54,16 @@ object PipelineBench {
   val PanelPasses = 2
   val TriggerMs = 500
 
-  private val trickle = Seq("JVMSTATS_EVENT" -> 0.4, "SPARK_STAGE_EVENT" -> 0.2,
-    "SPARK_STAGE_STATE_EVENT" -> 0.2, "SPARK_TASK_EVENT" -> 0.2)
-  private val heavy = Seq("JVMSTATS_EVENT" -> 0.5, "SPARK_TASK_EVENT" -> 0.35,
-    "SPARK_STAGE_EVENT" -> 0.1, "SPARK_STAGE_STATE_EVENT" -> 0.05)
-
   val workloads: Map[String, Workload] = Seq(
-    // per-frame costs dominate: many small frames, many short apps
-    Workload("ingest_small", FrameGen.Profile(largeShare = 0.03, largeMix = trickle,
-      shortApps = 100, longApps = 4), openRate = 300, drainFramesPerFile = 500),
-    // bytes dominate: JVMSTATS and heavy-tailed SPARK_TASK/STAGE bodies
-    // from a few long-lived apps, over a lighter short-app churn
-    Workload("ingest_large", FrameGen.Profile(largeShare = 0.7, largeMix = heavy,
-      shortApps = 50, longApps = 12), openRate = 150, drainFramesPerFile = 200)
+    // per-frame costs dominate: many short apps, whose containers send
+    // small frames; three small Spark apps feed the Spark panels
+    Workload("ingest_small", FrameGen.Profile(shortApps = 100, longApps = 3, executors = 4),
+      openRate = 200, drainFramesPerFile = 500),
+    // bytes dominate: a few long-lived Spark apps, whose executors send
+    // JVMSTATS and heavy-tailed SPARK_TASK/STAGE bodies, over a lighter
+    // short-app churn
+    Workload("ingest_large", FrameGen.Profile(shortApps = 20, longApps = 12, executors = 8),
+      openRate = 100, drainFramesPerFile = 300)
   ).map(w => w.name -> w).toMap
 
   // ------------------------------------------------------------ helpers
@@ -183,8 +181,6 @@ object PipelineBench {
     Readers(route, enrich, heur)
   }
 
-  private type Column = org.apache.spark.sql.Column
-
   /** file name -> batch id, from the file source's offset log, and batch
     * id -> commit time (ms), from the commit log of one reader checkpoint.
     */
@@ -213,7 +209,9 @@ object PipelineBench {
 
   // ------------------------------------------------------------ serving
 
-  /** One panel over the store. `read` resolves a type's table. */
+  /** One panel over the store. `read` resolves a type's table; `appId`
+    * is the application an app-scoped panel shows.
+    */
   def panel(name: String, read: String => DataFrame, appId: String): DataFrame = name match {
     case "fsOpsPerUser" => Dashboards.fsOpsPerUser(read("FS_EVENT"), "hdfs://root")
     case "fsOpsPerAction" => Dashboards.fsOpsPerAction(read("FS_EVENT"), "hdfs://prod-ns")
@@ -250,7 +248,7 @@ object PipelineBench {
 
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val Array(wName, seedS, secondsS, traceS, work, artifactDir, resultFile) = args
+    val Array(wName, seedS, secondsS, traceS, work, artifactDir, resultFile, build) = args
     val w = workloads.getOrElse(wName, sys.error(s"unknown workload $wName; known: " +
       workloads.keys.toSeq.sorted.mkString(", ")))
     val seed = seedS.toLong
@@ -291,7 +289,7 @@ object PipelineBench {
     val artifact = new File(artifactDir,
       s"${w.name}-seed$seed-trace${traceS}-$stamp-${ProcessHandle.current().pid()}.json")
     artifact.getParentFile.mkdirs()
-    if (traced) tracingOverhead(out, w.name, artifactDir)
+    if (traced) out.info("trace_overhead") = tracingOverhead(out, w.name, seed, build, artifactDir)
     // every metric goes out; the runner keeps the ones the run reports
     val metrics = Json.obj(out.metrics.toSeq.map { case (k, (v, u)) =>
       k -> Json.obj(Seq("value" -> v, "unit" -> u)) })
@@ -299,7 +297,7 @@ object PipelineBench {
       "correct" -> correct, "attempted" -> out.attempted, "failed" -> out.failed,
       "metrics" -> metrics))
     val full = Json.obj(Seq(
-      "workload" -> w.name, "seed" -> seed, "seconds" -> seconds, "trace" -> traced,
+      "workload" -> w.name, "seed" -> seed, "seconds" -> seconds, "trace" -> traced, "build" -> build,
       "correct" -> correct, "attempted" -> out.attempted, "failed" -> out.failed,
       "metrics" -> metrics,
       "checks" -> out.checks.map { case (n, e, a) =>
@@ -445,10 +443,20 @@ object PipelineBench {
     val quarters = (1 to 4).map(q => backlogAt(due(warmupFiles) + (openEnd - due(warmupFiles)) * q / 4))
     val backlogEnd = backlogAt(openEnd)
     out.info("backlog_frames_quarters") = quarters
-    // a backlog that keeps growing means the offered rate is not
-    // sustainable: the phase fails rather than reading as slow
-    val growing = quarters(3) > 2 * math.max(quarters(1), fpf * 2L * TriggerMs / FrameGen.FileMs)
-    if (growing) { out.failed += openLedger.frames; out.info("open_loop") = "backlog growing" }
+    // sustainability: a micro-batch reader keeps up, and its backlog stays
+    // bounded, exactly when each frame costs it less than the time between
+    // frames, i.e. when the offered rate is below the rate it drains a
+    // backlog at. Drain 1 measured that capacity for the slowest reader.
+    // Above it the backlog grows without bound: the phase fails rather than
+    // reading as slow. (The backlog itself cannot tell: the route reader's
+    // batches take 5-6 s, so the whole open loop lies in its start-up
+    // transient, in which the backlog rises at any rate.)
+    val offered = openLedger.frames / (openFiles * FrameGen.FileMs / 1000.0)
+    out.info("open_loop_offered_eps") = offered
+    out.info("open_loop_utilisation") = offered / drainEps
+    if (offered >= drainEps) {
+      out.failed += openLedger.frames; out.info("open_loop") = "offered rate above capacity"
+    }
     val genLate = actual.indices.map(k => (actual(k) - due(k)).toDouble)
     out.m("lag.backlog_frames_end", backlogEnd.toDouble, "count")
     out.m("lag.event_time_lag_ms_max", eventLagMax.toDouble, "ms")
@@ -458,7 +466,16 @@ object PipelineBench {
     phase("open_loop")
     // ---- serving: the panel list closed-loop from one client
     val sinkFiles = dataFiles(new File(store))
-    val appId = s"application_open_${seed}_${p.shortApps + 1}"
+    // each app-scoped panel shows the app with the most rows it selects,
+    // from the generator's ledger (the late-data app aside)
+    def busiest(tpe: String, sub: String): String = openLedger.rowsByApp.collect {
+      case ((app, t, s), n) if t == tpe && s == sub && !app.endsWith("_late") => (-n, app) }.min._2
+    val apps = Map(
+      "sparkStageDurations" -> busiest("SPARK_STAGE_EVENT", ""),
+      "appContainerMemory" -> busiest("CONTAINER_MONITORING_EVENT", "MEMORY"),
+      "stateAnnotations" -> busiest("SPARK_STAGE_STATE_EVENT", "BEGIN"))
+    out.info("panel_apps") = apps
+    def appOf(name: String): String = apps.getOrElse(name, "")
     var listMs = 0.0; var listed = 0L; var scanned = 0L
     def isolated(t: String): DataFrame = {
       val tl = System.nanoTime()
@@ -471,25 +488,33 @@ object PipelineBench {
     // correctness reference first: each panel over a plain directory
     // read, untimed; it also plans and compiles every panel once
     val expected = Panels.map(name =>
-      name -> rowsKey(panel(name, t => spark.read.parquet(s"$store/$t"), appId).collect().toSeq)).toMap
-    Panels.foreach(n => out.info(s"panel_rows_$n") = expected(n).length)
-    val panelLat = ArrayBuffer.empty[(String, Double)]
+      name -> rowsKey(panel(name, t => spark.read.parquet(s"$store/$t"), appOf(name)).collect().toSeq)).toMap
+    // an empty reference would make the panel's check vacuous
+    Panels.foreach { n =>
+      out.info(s"panel_rows_$n") = expected(n).length
+      out.check(s"open.panel_nonempty.$n", 1L, math.min(1L, expected(n).length.toLong))
+    }
+    val panelLat = ArrayBuffer.empty[(String, Int, Double)]
     (1 to PanelPasses).foreach { pass =>
       Panels.foreach { name =>
         out.attempted += 1
         val tp = System.nanoTime()
         try {
-          val rows = trace.fold(panel(name, isolated, appId).collect().toSeq)(t =>
-            t.tag("dash", s"$name-$pass")(panel(name, isolated, appId).collect().toSeq))
-          panelLat += name -> secs(tp) * 1000
+          val rows = trace.fold(panel(name, isolated, appOf(name)).collect().toSeq)(t =>
+            t.tag("dash", s"$name-$pass")(panel(name, isolated, appOf(name)).collect().toSeq))
+          panelLat += ((name, pass, secs(tp) * 1000))
           if (rowsKey(rows) != expected(name)) {
             out.failed += 1; out.info(s"panel_mismatch_$name") = true
           }
         } catch { case NonFatal(e) => out.failed += 1; out.info(s"panel_error_$name") = e.toString }
       }
     }
-    val lats = panelLat.map(_._2).toSeq
-    val perPanel = Panels.map(n => median(panelLat.filter(_._1 == n).map(_._2).toSeq))
+    val lats = panelLat.map(_._3).toSeq
+    // each panel's best pass: the first timed pass still warms the
+    // isolated-read path, and host noise only ever slows an execution
+    val perPanel = Panels.map(n => panelLat.filter(_._1 == n).map(_._3).minOption.getOrElse(0.0))
+    out.info("panel_pass_mean_ms") = (1 to PanelPasses).map(k =>
+      panelLat.filter(_._2 == k).map(_._3).sum / Panels.length)
     out.m("panel_latency_mean_ms", perPanel.sum / perPanel.length, "ms")
     out.m("panel_latency_p50_ms", quantile(lats, 0.5), "ms")
     out.m("panel_latency_p90_ms", quantile(lats, 0.9), "ms")
@@ -557,9 +582,10 @@ object PipelineBench {
     phase("checks")
     // ---- canaries after; a run whose canaries diverge is marked dirty
     val canaryAfter = canaries(spark, warm = false)
-    def spread(a: Double, b: Double) = math.max(a, b) / math.max(math.min(a, b), 1e-9) - 1
-    val dirty = Seq((canaryBefore._1, canaryAfter._1), (canaryBefore._2, canaryAfter._2)).exists {
-      case (a, b) => spread(a, b) > 0.5 && math.abs(a - b) > 0.25 }
+    // a host that got busier or quieter moves both shapes the same way; a
+    // ~0.1 s shape alone is too noisy to call a change of host
+    val ratios = Seq(canaryAfter._1 / canaryBefore._1, canaryAfter._2 / canaryBefore._2)
+    val dirty = ratios.forall(_ > 1.5) || ratios.forall(_ < 1 / 1.5)
     out.info("canary") = Json.obj(Seq("scan_before_s" -> canaryBefore._1, "scan_after_s" -> canaryAfter._1,
       "jobs_before_s" -> canaryBefore._2, "jobs_after_s" -> canaryAfter._2))
     out.info("dirty") = dirty
@@ -594,31 +620,37 @@ object PipelineBench {
   val SchedLayers: Seq[String] = Seq("route", "enrich", "session", "dash", "compact")
 
   /** Tracing overhead: the traced run's end-to-end figures against the
-    * median of the untraced artifacts of the same workload in
-    * `artifactDir`, as percent worse (0, with `trace.ref_runs` = 0, when
-    * there are none).
+    * median of the untraced artifacts in `artifactDir` of the same
+    * workload, seed and build, as percent worse. Each figure is null when
+    * there is no such artifact.
     */
-  def tracingOverhead(out: Out, workload: String, artifactDir: String): Unit = {
+  def tracingOverhead(out: Out, workload: String, seed: Long, build: String,
+                      artifactDir: String): Json.Raw = {
     val refs = Option(new File(artifactDir).listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith(s"$workload-") && f.getName.contains("-trace0-"))
+      .filter(_.getName.startsWith(s"$workload-seed$seed-trace0-"))
       .map(f => new String(Files.readAllBytes(f.toPath), "UTF-8"))
-    out.m("trace.ref_runs", refs.size, "count")
-    Seq(("ingest_eps", false), ("route_latency_mean_ms", true), ("panel_latency_mean_ms", true))
-      .foreach { case (k, lowerIsBetter) =>
-        val base = median(refs.flatMap(Json.metricValue(_, k)))
-        val pct = out.metrics.get(k).filter(_ => base > 0).map { case (v, _) =>
-          (if (lowerIsBetter) v - base else base - v) / base * 100 }.getOrElse(0.0)
-        out.m(s"trace.${k}_overhead_pct", pct, "%")
+      .filter(_.contains(s"\"build\":${Json.str(build)}"))
+    Json.obj(("ref_runs" -> refs.size) +: Seq(("ingest_eps", false), ("route_latency_mean_ms", true),
+      ("panel_latency_mean_ms", true)).map { case (k, lowerIsBetter) =>
+      val base = refs.flatMap(Json.metricValue(_, k))
+      val pct = for ((v, _) <- out.metrics.get(k) if base.nonEmpty) yield {
+        val b = median(base)
+        (if (lowerIsBetter) v - b else b - v) / b * 100
       }
+      s"${k}_overhead_pct" -> pct.fold[Any](null)(identity)
+    })
   }
 
-  /** Bench's two canary shapes, scaled down: a fixed scan+shuffle and 3
-    * tiny sequential jobs (seconds, timed once the shapes are compiled).
+  /** Bench's two canary shapes, scaled down to fit a run: a fixed
+    * scan+shuffle (best of three executions) and 3 (not 30) tiny sequential
+    * jobs (best of two), after a full GC, in seconds. Before the run, the
+    * scan first runs four times untimed and the jobs twice: about as many
+    * executions as each takes to reach its warm speed.
     */
   def canaries(spark: SparkSession, warm: Boolean): (Double, Double) = {
     def scan(): Double = {
       val t = System.nanoTime()
-      spark.range(0, 3000000, 1, Cores).selectExpr("id % 13 as k", "id * 7 as v")
+      spark.range(0, 1500000, 1, Cores).selectExpr("id % 13 as k", "id * 7 as v")
         .groupBy("k").agg(sum("v")).write.format("noop").mode("overwrite").save()
       secs(t)
     }
@@ -627,9 +659,10 @@ object PipelineBench {
       (0 until 3).foreach(i => spark.range(200000L + i).selectExpr("sum(id * 3 + 1)").collect())
       secs(t)
     }
-    // the first execution of each shape compiles it
-    if (warm) { scan(); jobs() }
-    (scan(), jobs())
+    if (warm) { (1 to 4).foreach(_ => scan()); (1 to 2).foreach(_ => jobs()) }
+    // each figure follows a full GC, which slows the next executions alike
+    System.gc()
+    (Seq.fill(3)(scan()).min, Seq.fill(2)(jobs()).min)
   }
 
   def heapAfterGc(): Double = {
