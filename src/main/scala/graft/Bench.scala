@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver contract: run every SparkEntry query at SPARK_GRAFT_SF_DIR and
@@ -173,8 +175,12 @@ object Bench {
     try {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "bench_summary.json")
       val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")
-      try { w.println(fullLine); w.println(summaryLine) } finally w.close()
-    } catch { case e: Throwable =>
+      // PrintWriter never throws on I/O: it only sets an error flag
+      try {
+        w.println(fullLine); w.println(summaryLine)
+        if (w.checkError()) throw new java.io.IOException(s"write to $out failed")
+      } finally w.close()
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] summary file write failed (non-fatal): $e")
     }
     spark.stop()

@@ -29,6 +29,9 @@ object ProtoExpressions {
     override def dataType: DataType = desc.schema
     override def nullable: Boolean = true
     override def prettyName: String = s"proto_decode_${desc.name}"
+    // prettyName already names the descriptor; its full field list would be
+    // printed into every plan string, and Spark retains one per SQL execution
+    override protected def stringArgs: Iterator[Any] = Iterator(child)
 
     override def nullSafeEval(v: Any): Any = desc.decode(v.asInstanceOf[Array[Byte]])
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.EventModel
@@ -99,19 +99,28 @@ object FrameSource {
   def typedTable(frames: DataFrame, eventType: String): DataFrame = {
     import graft.functions.ProtoExpressions.proto_decode
     import graft.model.ProtoDescriptors
-    val bodyDesc = ProtoDescriptors.byEventType(eventType)
-    val headerCols = ProtoDescriptors.header.schema.fieldNames.toSeq
-      .map(f => col("_h").getField(f).as(f))
-    val bodyCols = bodyDesc.schema.fieldNames.toSeq
-      .map(f => col("_b").getField(f).as(f))
     frames.where(col("event_type") === eventType)
       .select(
         proto_decode(col("header"), ProtoDescriptors.header).as("_h"),
-        proto_decode(col("body"), bodyDesc).as("_b"),
+        proto_decode(col("body"), ProtoDescriptors.byEventType(eventType)).as("_b"),
         col("timestamp"), col("kafka_offset"), col("event_type"))
       .where(col("_h").isNotNull && col("_b").isNotNull)
-      .select(headerCols ++ bodyCols ++
-        Seq(col("timestamp"), col("kafka_offset"), col("event_type")): _*)
+      .select(typedColumns(col("_h"), col("_b"), eventType) :+ col("event_type"): _*)
+  }
+
+  /** The flattened typed row of `eventType`, read off its decoded header
+    * and body structs: `header ++ body ++ (timestamp, kafka_offset)`.
+    * [[typedTable]] and [[graft.streaming.EventRouter]] both select
+    * through it, so a routed table's schema is typedTable's by
+    * construction.
+    */
+  def typedColumns(header: Column, body: Column, eventType: String): Seq[Column] = {
+    import graft.model.ProtoDescriptors
+    def fields(schema: org.apache.spark.sql.types.StructType, struct: Column) =
+      schema.fieldNames.toSeq.map(f => struct.getField(f).as(f))
+    fields(ProtoDescriptors.header.schema, header) ++
+      fields(ProtoDescriptors.byEventType(eventType).schema, body) ++
+      Seq(col("timestamp"), col("kafka_offset"))
   }
 
   /** All typed tables present in a frame stream — feed to

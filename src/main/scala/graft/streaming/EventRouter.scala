@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, date_trunc, octet_length, to_date, when}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.model.EventModel
+import graft.functions.ProtoExpressions.proto_decode
+import graft.model.{EventModel, ProtoDescriptors}
 import graft.sources.FrameSource
 
 /** The multi-type streaming read path: ONE pass over the wire stream,
@@ -14,10 +16,13 @@ import graft.sources.FrameSource
   * .../HdfsExporter.java:91-140 — 18 event writers behind one
   * GarmadonReader). The naive Spark translation — N independent
   * `typedTable` streaming queries — re-reads the Kafka topic N times.
-  * This router is the scale-correct shape: decode the envelope once per
-  * micro-batch, persist the decoded batch, then filter + proto-decode +
-  * append each type's partition of it (the marker filter makes each
-  * branch's body decode touch only its own rows).
+  *
+  * The router's cost is per micro-batch, not per row: every Spark job and
+  * every parquet append carries a fixed cost that a small batch never
+  * amortises. So each batch is decoded once (header and each row's own
+  * body) and cached; one job over the cache finds the types present and
+  * their bytes; then each present type writes one file per day from the
+  * cache, concurrently with the other types.
   *
   * Day-partitioned layout and the day-close markers ride along: after each
   * batch, days the watermark has passed get their `_DONE` markers
@@ -71,45 +76,62 @@ object EventRouter {
     routeDecodedBatch(FrameSource.decodeFramesFast(batch, acceptedTypes = types),
       basePath, types)
 
-  /** One decoded micro-batch: cache it, find the types actually present
-    * with ONE job (a per-type isEmpty would scan the whole cached batch
-    * once per ABSENT type), append each present type's typed rows.
+  /** One envelope-decoded micro-batch → per-type day-partitioned appends.
+    *
+    *  - Decode once, then cache: each row keeps its header struct and,
+    *    through a per-type CASE, only its own body struct. Rows whose
+    *    header or own body fails to decode are dropped when read back from
+    *    the cache, so a type whose frames are all corrupt is absent below
+    *    and never creates an (unreadable, schema-less) table directory.
+    *    The drop stays out of the cached plan on purpose: the optimizer
+    *    would push it below the decode projection and decode each row
+    *    twice.
+    *  - One job over the cache returns the types present and their wire
+    *    bytes.
+    *  - Each present type writes from the cache, coalesced (no exchange) to
+    *    one writer per `spark.sql.files.maxPartitionBytes` of its bytes, at
+    *    least one: a small batch writes one file per (type, day), a
+    *    catch-up batch still writes in parallel. Types write concurrently
+    *    into disjoint table directories.
     */
   def routeDecodedBatch(frames: DataFrame, basePath: String, types: Seq[String]): Unit = {
-    // NOTE (r15): repartitioning the batch here (or the raw stream ahead
-    // of the decode) was tried and MEASURED SLOWER on the gate harness —
-    // the added exchange cost more than the decode parallelism it bought;
-    // per-type parallelism below is what pays
-    frames.persist()
+    if (types.isEmpty) return
+    val spark = frames.sparkSession
+    import spark.implicits._
+    val body = types.map(t => t -> s"_body_$t").toMap
+    val bodies = types.map(t => when(col("event_type") === t,
+      proto_decode(col("body"), ProtoDescriptors.byEventType(t))).as(body(t)))
+    val decoded = frames
+      .select(Seq(col("event_type"),
+        proto_decode(col("header"), ProtoDescriptors.header).as("_header")) ++ bodies ++
+        Seq(col("timestamp"), col("kafka_offset"),
+          (octet_length(col("header")) + octet_length(col("body"))).cast("long").as("_bytes")): _*)
+      .persist()
     try {
-      import org.apache.spark.sql.functions.{col, date_trunc, to_date}
-      val present = frames.select("event_type").distinct()
-        .collect().map(_.getString(0)).toSet
-      // independent per-type appends run CONCURRENTLY (r15, guide §2.6):
-      // they read the same cached batch and write disjoint table dirs, so
-      // the only serialization left is the scheduler; one type's straggler
-      // tail back-fills with the next type's tasks. Same pool discipline
-      // as sinkMaintenance's partition sweep.
+      val valid = col("_header").isNotNull && types.map(t => col(body(t)).isNotNull).reduce(_ || _)
+      // per-partition sums merged on the driver: a groupBy would add a
+      // shuffle, i.e. a second job under AQE
+      val bytesByType = decoded.where(valid).select(col("event_type"), col("_bytes")).as[(String, Long)]
+        .mapPartitions { rows =>
+          val m = scala.collection.mutable.HashMap.empty[String, Long]
+          rows.foreach { case (t, n) => m(t) = m.getOrElse(t, 0L) + n }
+          m.iterator
+        }.collect().groupMapReduce(_._1)(_._2)(_ + _)
+      val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
       graft.operators.Maintenance.parallelSweep(
-        types.filter(present), s"routeDecodedBatch at $basePath") { tpe =>
-        val typed = FrameSource.typedTable(frames, tpe)
-        // the present set is PRE-decode: a type whose only frames fail the
-        // proto decode (typedTable's isNotNull filter) still reaches here,
-        // and an empty Append would create a schema-less table dir that
-        // breaks readers until real data arrives — so the cheap per-
-        // PRESENT-type guard stays (absent types never get this far)
-        if (!typed.isEmpty) {
-          // per-type tables partition by day only — the type IS the
-          // directory (reference's one-table-per-descriptor layout);
-          // unionView re-tags event_type when reading across types
-          typed.drop("event_type")
-            .withColumn("day", to_date(date_trunc("day", col("timestamp"))))
-            .sortWithinPartitions(col("day"), col("timestamp"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .partitionBy("day").parquet(s"$basePath/$tpe")
-        }
+        types.filter(bytesByType.contains), s"routeDecodedBatch at $basePath") { tpe =>
+        // per-type tables partition by day only — the type IS the
+        // directory (reference's one-table-per-descriptor layout);
+        // unionView re-tags event_type when reading across types
+        decoded.where(col("event_type") === tpe && col("_header").isNotNull && col(body(tpe)).isNotNull)
+          .select(FrameSource.typedColumns(col("_header"), col(body(tpe)), tpe): _*)
+          .coalesce(math.max(1L, (bytesByType(tpe) + maxBytes - 1) / maxBytes).toInt)
+          .withColumn("day", to_date(date_trunc("day", col("timestamp"))))
+          .sortWithinPartitions(col("day"), col("timestamp"))
+          .write.mode(SaveMode.Append)
+          .partitionBy("day").parquet(s"$basePath/$tpe")
       }
-    } finally frames.unpersist()
+    } finally decoded.unpersist()
   }
 
   /** Watermark epilogue: write `_DONE` markers for all routed tables once

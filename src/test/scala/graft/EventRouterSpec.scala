@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.model.{EventModel, ProtoDescriptors}
-import graft.sources.EventTables
+import graft.sources.{EventTables, FrameSource}
 import graft.streaming.EventRouter
 
 /** Decode-once multi-type routing: one wire stream → N typed day-partitioned
@@ -28,6 +28,17 @@ class EventRouterSpec extends SparkSpecBase {
     (EventModel.encode(EventModel.Frame(1000, ts,
       header, ProtoDescriptors.gcStatisticsData.encode(
         Seq("PS Scavenge", pause, "Allocation Failure") ++ Seq.fill(10)(0L) ++ Seq(0.0f)))), off)
+
+  private def stateFrame(ts: Long, state: String, off: Long): (Array[Byte], Long) =
+    (EventModel.encode(EventModel.Frame(3, ts,
+      header, ProtoDescriptors.stateEvent.encode(Seq(state)))), off)
+
+  private def memFrame(ts: Long, value: Float, off: Long): (Array[Byte], Long) =
+    (EventModel.encode(EventModel.Frame(2000, ts,
+      header, ProtoDescriptors.containerResourceEvent.encode(Seq("MEMORY", 4096L, value)))), off)
+
+  private def corruptGcFrame(ts: Long, off: Long): (Array[Byte], Long) =
+    (EventModel.encode(EventModel.Frame(1000, ts, header, Array[Byte](0xFF.toByte))), off)
 
   private val day1 = java.sql.Timestamp.valueOf("2024-03-01 10:00:00").getTime
   private val day2 = java.sql.Timestamp.valueOf("2024-03-02 10:00:00").getTime
@@ -105,6 +116,79 @@ class EventRouterSpec extends SparkSpecBase {
     assert(spark.read.parquet(s"$base/FS_EVENT").count() == 1)
     assert(!new java.io.File(s"$base/GC_EVENT").exists(),
       "corrupt-only GC_EVENT batch must not create an empty table dir")
+  }
+
+  private val mixedTypes =
+    Seq("FS_EVENT", "GC_EVENT", "STATE_EVENT", "CONTAINER_MONITORING_EVENT")
+
+  /** Four types over two days, interleaved across four input partitions. */
+  private lazy val mixedFrames = {
+    val frames = (0 until 24).map { i =>
+      val ts = (if (i / 4 % 2 == 0) day1 else day2) + i * 1000L
+      i % 4 match {
+        case 0 => fsFrame(ts, s"A$i", i)
+        case 1 => gcFrame(ts, i, i)
+        case 2 => stateFrame(ts, s"S$i", i)
+        case _ => memFrame(ts, i.toFloat, i)
+      }
+    }
+    spark.sparkContext.parallelize(frames, 4).toDF("value", "offset")
+  }
+
+  private lazy val mixedBase = {
+    val base = Files.createTempDirectory("router_mixed").toString
+    EventRouter.routeBatch(mixedFrames, base, mixedTypes)
+    base
+  }
+
+  private def dataFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.filter(f => f.getName.startsWith("part-"))
+
+  test("routed rows and schema equal typedTable's, without event_type and with day") {
+    val decoded = FrameSource.decodeFramesFast(mixedFrames, acceptedTypes = mixedTypes)
+    mixedTypes.foreach { t =>
+      val expected = FrameSource.typedTable(decoded, t).drop("event_type")
+        .withColumn("day", to_date(col("timestamp")))
+      val routed = spark.read.parquet(s"$mixedBase/$t")
+      assert(routed.schema.catalogString == expected.schema.catalogString, t)
+      assert(routed.count() == 6 && expected.count() == 6, t)
+      assert(routed.exceptAll(expected).isEmpty && expected.exceptAll(routed).isEmpty, t)
+    }
+  }
+
+  test("each (type, day) of a multi-partition batch holds exactly one data file") {
+    mixedTypes.foreach { t =>
+      val days = new java.io.File(s"$mixedBase/$t").listFiles().filter(_.getName.startsWith("day="))
+      assert(days.map(_.getName).toSet == Set("day=2024-03-01", "day=2024-03-02"), t)
+      days.foreach(d => assert(dataFiles(d).length == 1, s"$t/${d.getName}"))
+    }
+  }
+
+  test("a type with valid and corrupt bodies routes only its valid rows") {
+    val base = Files.createTempDirectory("router_mixed_corrupt").toString
+    val b = Seq(gcFrame(day1, 5, 1), corruptGcFrame(day1, 2), gcFrame(day2, 9, 3),
+      corruptGcFrame(day2, 4), fsFrame(day1, "READ", 5)).toDF("value", "offset")
+    EventRouter.routeBatch(b, base, Seq("FS_EVENT", "GC_EVENT"))
+    val gc = spark.read.parquet(s"$base/GC_EVENT")
+    assert(gc.select("kafka_offset", "pause_time").as[(Long, Long)].collect().toSet ==
+      Set((1L, 5L), (3L, 9L)))
+    assert(spark.read.parquet(s"$base/FS_EVENT").count() == 1)
+  }
+
+  test("a type's writer count is its batch bytes over maxPartitionBytes") {
+    val base = Files.createTempDirectory("router_wide").toString
+    val frames = spark.sparkContext.parallelize(
+      (0 until 40).map(i => fsFrame(day1 + i, s"A$i", i)), 4).toDF("value", "offset")
+    val bytes = FrameSource.decodeFramesFast(frames)
+      .select(sum(octet_length(col("header")) + octet_length(col("body")))).as[Long].head()
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    // just over half the batch: two writers for the four input partitions
+    spark.conf.set(key, (bytes / 2 + 1).toString)
+    try EventRouter.routeBatch(frames, base, Seq("FS_EVENT"))
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(dataFiles(new java.io.File(s"$base/FS_EVENT/day=2024-03-01")).length == 2)
+    assert(spark.read.parquet(s"$base/FS_EVENT").count() == 40)
   }
 
   test("batch routeBatch appends without duplicating other types") {
