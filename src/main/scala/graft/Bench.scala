@@ -4,8 +4,9 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
-/** Driver contract: run every SparkEntry query at SPARK_GRAFT_SF_DIR and
-  * print ONE JSON line of per-query wall-clock seconds.
+/** Driver contract: run every SparkEntry query (or the SPARK_GRAFT_QUERIES
+  * subset, e.g. to bisect a regression) at SPARK_GRAFT_SF_DIR and print
+  * ONE JSON line of per-query wall-clock seconds.
   *
   * Measurement hygiene:
   *  - results are written to the `noop` sink, which evaluates every output
@@ -76,20 +77,11 @@ object Bench {
   private def medianOf(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
 
   def main(args: Array[String]): Unit = {
-    // %f formatting must be locale-independent or the JSON line breaks
-    // on decimal-comma locales
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES"))
+    val spark = GraftSession(cpus, "Bench")
     // Warm the JVM/session so the first query isn't charged for executor
     // start; per-query warmup below handles per-plan codegen.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -103,8 +95,8 @@ object Bench {
     // it throws instead of running — the artifact must still carry every
     // other measurement plus one "error" entry, and exit nonzero
     val inject = sys.env.get("SPARK_GRAFT_BENCH_INJECT_FAILURE")
-    val queryMap = inject.fold(SparkEntry.queries)(n =>
-      SparkEntry.queries + (n -> ((_: SparkSession, _: String) =>
+    val queryMap = inject.fold(selected)(n =>
+      selected + (n -> ((_: SparkSession, _: String) =>
         throw new RuntimeException("injected failure (SPARK_GRAFT_BENCH_INJECT_FAILURE)"))))
     val attempts: Seq[(String, Either[String, Seq[Double]])] =
       queryMap.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -173,7 +165,8 @@ object Bench {
     // ALSO write the two JSON lines to a file. Purely additive — stdout
     // carries the exact same lines it always has.
     try {
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "bench_summary.json")
+      // one file per core count, so a c8 sweep keeps the c32 sweep's data
+      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", s"bench_summary_c$cpus.json")
       val w = new java.io.PrintWriter(new java.io.File(out), "UTF-8")
       // PrintWriter never throws on I/O: it only sets an error flag
       try {

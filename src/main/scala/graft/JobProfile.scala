@@ -19,17 +19,8 @@ object JobProfile {
                              var runMs: Long = 0L, var cpuMs: Long = 0L)
 
   def main(args: Array[String]): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus, "JobProfile")
     val jobs = mutable.LinkedHashMap.empty[Int, J]
     val stageToJob = mutable.HashMap.empty[Int, Int]
     val execDesc = mutable.HashMap.empty[String, String]

@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev utility: print explain("formatted") for the named queries. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus, "PlanDump")
     // SPARK_GRAFT_NO_AQE=1: static planning, so ReuseExchange shows in
     // explain output (AQE reuses stages at runtime without printing it)
     if (sys.env.contains("SPARK_GRAFT_NO_AQE"))

@@ -200,6 +200,21 @@ object SparkEntry {
       .orderBy(col("bucket"), col("event_type"))
   }
 
+  /** The queries a comma-separated name list (`SPARK_GRAFT_QUERIES` of
+    * `Bench` and `Verify`) selects: all of them when it is unset or empty.
+    * A name that is not a query throws before any query runs, so a typo
+    * cannot pass as a run that checked or timed nothing.
+    */
+  def selected(names: Option[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    val wanted = names.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = wanted -- all.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s) ${unknown.toSeq.sorted.mkString(", ")}; " +
+        s"valid: ${all.keys.toSeq.sorted.mkString(", ")}")
+    if (wanted.isEmpty) all else all.filter { case (n, _) => wanted(n) }
+  }
+
   // =================================================================
   // Query registry — one entry per operator family (SURVEY §2.9 D1-D11
   // + the training-data-pipeline operators).

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.{EventModel, ProtoDescriptors}
@@ -22,16 +22,10 @@ import graft.sources.FrameSource
   */
 object ThroughputBench {
   def main(args: Array[String]): Unit = {
-    // %f formatting must be locale-independent or the JSON line breaks
-    // on decimal-comma locales
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val nEvents = args.headOption.map(_.toInt).getOrElse(2000000)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus, "ThroughputBench")
     import spark.implicits._
 
     // Synthesize realistic frames: proto3-encoded FS_EVENT/GC/STATE bodies

@@ -1,26 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The optional
+  * SPARK_GRAFT_QUERIES=q_a,q_b subset (for local iteration) narrows both. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES"))
+    val spark = GraftSession(GraftSession.cpus, "Verify")
     new java.io.File(outDir).mkdirs()
-    // Optional subset for local iteration: SPARK_GRAFT_QUERIES=q_a,q_b
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -41,7 +29,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * O(1)), merges partials, and emits the ranked array — one record per
   * (partition, group) on the shuffle, and the only sorts ever performed
   * are over ≤ 4k-entry buffers. Measured vs the window form on the sf0.1
-  * embeddings (`ScaleBench knntopk`): 5× fewer shuffle records, ~1.5×
+  * embeddings (SCALE.md "Measured scale constants", knntopk point): 5× fewer shuffle records, ~1.5×
   * faster end-to-end; at corpus scale the removed per-partition sort of
   * all scored rows is the dominant term.
   *

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions.col
   * surviving text from fixture arithmetic. Map-only: runs per-row via
   * the codegen scalar [[graft.functions.TextExpressions.html_clean]],
   * no shuffle, no UDF — at 100 TB this stage streams at parse speed
-  * like [[HtmlExtract]] (ScaleBench `crawl`).
+  * like [[HtmlExtract]] (SCALE.md "Round-10 session-3 additions").
   */
 object Boilerplate {
 

@@ -218,7 +218,7 @@ object Dedup {
     * one that grows with N².
     */
   /** The deduped LSH candidate id-pair stage of [[minHashLshPairs]],
-    * exposed separately so scale harnesses (ScaleBench) can measure
+    * exposed separately so scale measurements (SCALE.md) can report
     * candidate volume — THE number that decides whether the dedup plan
     * survives a corpus-size jump — without the verify stage.
     * `sigs` is a [[minHashSignatures]] output.
@@ -254,7 +254,7 @@ object Dedup {
     * grows with corpus size; the new batch is assumed increment-sized.
     * Both signature tables must share (shingleK, numHashes).
     *
-    * Scale constants (ScaleBench `increment`, SCALE.md): candidate and
+    * Scale constants (SCALE.md "Measured scale constants", increment points): candidate and
     * verified pairs are FLAT across a 10× corpus (the outcome is a pure
     * function of the increment's true matches); the linear-in-corpus term
     * is the corpus-side banding this join recomputes per call — one
@@ -353,9 +353,8 @@ object Dedup {
     newDocs.join(pairs.select(col("new_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** The estimate-scoring verify stage shared by [[minHashLshPairs]],
-    * [[minHashLshPairsAgainst]] and the ScaleBench harness — ONE
-    * definition so a measurement harness can never drift from the
-    * production plan it publishes numbers for. Joins each side's
+    * [[minHashLshPairsAgainst]] — ONE definition, so a measurement of
+    * either can never drift from the production plan. Joins each side's
     * signature back onto the (deduped) candidate pairs and emits
     * `est_jaccard` = signature agreement rate.
     */

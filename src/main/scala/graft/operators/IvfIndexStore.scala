@@ -482,7 +482,7 @@ object IvfIndexStore {
   }
 
   /** The streaming ingest wrapper: embedding micro-batches → [[append]]
-    * per batch (map-only; see the ScaleBench `ivfappend` point). Caller
+    * per batch (map-only; see SCALE.md "Measured scale constants", IVF-store append point). Caller
     * starts it with its own trigger/checkpoint. Replay of a micro-batch
     * after a crash re-appends its rows — at-least-once, repaired by
     * [[compactGeneration]] at maintenance time (same contract as the

@@ -63,7 +63,7 @@ object Similarity {
     * window form's shuffle bounded, but only after SORTING every scored
     * row within each partition; the aggregate replaces that corpus-sized
     * sort with an O(k) buffer + constant-time worst-entry gate (measured
-    * in `ScaleBench knntopk`, both forms warmed: 5× fewer shuffle records, ~1.4× faster — the wall gap grows with corpus size since the removed sort is the corpus-sized term).
+    * in SCALE.md "Measured scale constants", knntopk point, both forms warmed: 5× fewer shuffle records, ~1.4× faster — the wall gap grows with corpus size since the removed sort is the corpus-sized term).
     * Output ordering and tie-breaks (score desc, id asc) are identical.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {

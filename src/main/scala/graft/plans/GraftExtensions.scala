@@ -10,12 +10,12 @@ import graft.model.ProtoDescriptors
 
 /** SQL surface for the engine's custom expressions (SURVEY §4's
   * `SparkSessionExtensions` injection point): everything the Scala Column
-  * API exposes is also callable from `spark.sql(...)` after
+  * API exposes is also callable from `spark.sql(...)` on a session whose
+  * builder was given
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)                       // code, or
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions") // conf
+  * builder.withExtensions(new GraftExtensions)                          // code, or
+  * builder.config("spark.sql.extensions", "graft.plans.GraftExtensions") // conf
   * }}}
   *
   * so a pure-SQL user of the reference's query surface can run the same

@@ -31,7 +31,7 @@ object BucketedTables {
   /** Scratch directory for throwaway on-disk fixtures, deleted recursively
     * on JVM exit — the ONE temp-dir discipline for every gate/bench
     * fixture in the engine (bucketed layouts here; signature/banded tables
-    * and IVF stores in `SparkEntry`/`ScaleBench`). Gate/bench queries
+    * and IVF stores in `SparkEntry`). Gate/bench queries
     * write fixtures INSIDE the query closure, where eager deletion is
     * impossible (the returned lazy plan still reads the files) — without
     * the hook every invocation leaks a directory. The unique stamp in the

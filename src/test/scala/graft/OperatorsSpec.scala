@@ -257,6 +257,15 @@ class OperatorsSpec extends SparkSpecBase {
       // min_by gets a partial_ stage before the exchange (map-side combine)
       assert(physical.contains("partial_min_by"), physical)
     } finally comps.unpersist()
+    // a flood component (one label over 1000 docs) beside 100 singletons
+    // keeps one row per group: 101, the flood's best score at its min id
+    val flood = spark.range(1100).select(col("id").as("doc_id"),
+      (col("id") % 97L).cast("double").as("score"))
+    val floodComps = spark.range(1100).select(col("id"),
+      when(col("id") < 1000L, lit(0L)).otherwise(col("id")).as("component"))
+    val floodKept = Dedup.keepBestPerGroupPlan(flood, "doc_id", floodComps, col("score"))
+      .select("doc_id").as[Long].collect().toSet
+    assert(floodKept == Set(96L) ++ (1000L until 1100L))
     // the score contract is ENFORCED, not just documented: a null or NaN
     // score would silently invert the winner under the negated min_by
     // ordering — both raise instead
@@ -938,6 +947,16 @@ class OperatorsSpec extends SparkSpecBase {
       Tables.load(spark, sfDir, "embeddings"), "vec_id", "embedding")
     val bad = audit.where(col("err2") > col("max_abs") * col("max_abs") / (127.0 * 127.0) * 16)
     assert(bad.isEmpty)
+    // the kernels equal the array_max(transform) + transform(when) form
+    // they replaced, on every fixture vector
+    val legacyMax = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
+    val legacy = Tables.load(spark, sfDir, "embeddings").select(col("vec_id"),
+      legacyMax.as("max_abs"),
+      transform(col("embedding"), x => when(legacyMax === 0d, lit(0).cast("byte"))
+        .otherwise(floor(x.cast("double") / legacyMax * 127d + 0.5d).cast("byte"))).as("codes"))
+    val kernel = full.select("vec_id", "max_abs", "codes")
+    assert(kernel.count() > 0 &&
+      kernel.exceptAll(legacy).isEmpty && legacy.exceptAll(kernel).isEmpty)
     // the BUILD pass (scale + codes) is codegen kernels, not transform
     // lambdas — quantError's audit folds stay HOFs by design (sampled
     // diagnostic, not the corpus pass)
@@ -1189,6 +1208,15 @@ class OperatorsSpec extends SparkSpecBase {
       .select(col("doc_id"), TextAnalysis.bigramStream(col("text")).as("bg"))
     assert(weird.orderBy("doc_id").as[(Long, Seq[String])].collect().toSeq ==
       Seq((1L, Seq("a ", " b")), (2L, Seq(" x")), (3L, Seq("w1 w2", "w2 w3"))))
+    // and it equals the zip_with form it replaced on every fixture document
+    val toks = split(col("text"), " ")
+    val zipForm = when(size(toks) >= 2, zip_with(
+        slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
+        (a, b) => concat(a, lit(" "), b)))
+      .otherwise(array().cast("array<string>"))
+    val fixtureDocs = Tables.load(spark, sfDir, "documents")
+    assert(fixtureDocs.count() > 0 &&
+      fixtureDocs.where(TextAnalysis.bigramStream(col("text")) =!= zipForm).isEmpty)
     val plan = docs.select(TextAnalysis.bigramStream(col("text")))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("lambdafunction") && !plan.contains("zip_with"), plan)

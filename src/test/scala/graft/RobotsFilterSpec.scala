@@ -13,8 +13,9 @@ import graft.operators.RobotsFilter.parseRobotsRules
 class RobotsFilterSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def verdict(rules: Seq[RobotsFilter.Rule], path: String): Boolean = {
-    val matching = rules.filter(r => TokenFolds.robotsMatch(path, r.pattern))
+  private def verdict(rules: Seq[RobotsFilter.Rule], path: String,
+                      matches: (String, String) => Boolean = TokenFolds.robotsMatch): Boolean = {
+    val matching = rules.filter(r => matches(path, r.pattern))
     if (matching.isEmpty) true
     else {
       val maxLen = matching.map(_.pattern.length).max
@@ -141,6 +142,37 @@ class RobotsFilterSpec extends SparkSpecBase {
     assert(bigPlan.contains("*("),
       s"verdict must stay inside WholeStageCodegen:\n$bigPlan")
     assert(bigPlan.contains("graft_robots_verdict"), bigPlan)
+    // 50 hosts x 40 rules (prefixes, deep allows, wildcard queries,
+    // anchored *.pdf$): with k = id mod 40, a URL is blocked iff
+    // k mod 4 = 0, and each verdict equals the regex fold the kernel
+    // replaced (each rule an anchored regex, longest match, ties allow)
+    val robotsTxt = "User-agent: *\n" + (0 until 40).map { j =>
+      if (j % 4 == 0) s"Disallow: /d$j"
+      else if (j % 4 == 1) s"Allow: /d${j - 1}/ok"
+      else if (j % 4 == 2) s"Disallow: /*?x$j="
+      else "Disallow: /p" + j + "*.pdf$"
+    }.mkString("\n") + "\n"
+    val manyRules = spark.range(50).select(
+      concat(lit("h"), col("id").cast("string"), lit(".ex")).as("host"),
+      lit(robotsTxt).as("content"))
+    val manyUrls = spark.range(4000).select(col("id"),
+      concat(lit("http://h"), (col("id") % 50L).cast("string"), lit(".ex/d"),
+        (col("id") % 40L).cast("string"), lit("/p"), col("id").cast("string")).as("url"))
+    val verdicts = RobotsFilter.markAllowed(manyUrls, manyRules, "url")
+      .select("id", "allowed").as[(Long, Boolean)].collect()
+    assert(verdicts.length == 4000 && verdicts.count(_._2) == 4000 / 40 * 30)
+    def toRx(p: String): java.util.regex.Pattern = {
+      val anchored = p.endsWith("$")
+      val body = if (anchored) p.dropRight(1) else p
+      java.util.regex.Pattern.compile(body.split("\\*", -1)
+        .map(java.util.regex.Pattern.quote).mkString("^", ".*", if (anchored) "$" else ""))
+    }
+    val rules = parseRobotsRules(robotsTxt, "*")
+    val rx = rules.map(r => r.pattern -> toRx(r.pattern)).toMap
+    verdicts.foreach { case (id, allowed) =>
+      assert(allowed == verdict(rules, s"/d${id % 40}/p$id",
+        (path, pattern) => rx(pattern).matcher(path).find()), s"url $id")
+    }
   }
 
   test("authority-only URL is the root path (RFC 9309); duplicate host rows do not fan URLs out") {

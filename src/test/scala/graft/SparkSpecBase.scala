@@ -5,13 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per suite, lazy). */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // a fixed 4, never SPARK_GRAFT_CPUS: the test command sets that to nproc
+  lazy val spark: SparkSession = GraftSession(4, getClass.getSimpleName)
 
   val sfDir = "/root/testdata/sf0.001"
 }

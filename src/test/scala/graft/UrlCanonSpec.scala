@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.UrlCanon
+import graft.functions.{TextExpressions, UrlCanon}
 import graft.operators.TextAnalysis
 
 /** URL canonicalization edges beyond the oracle fixture, and the
@@ -66,6 +66,18 @@ class UrlCanonSpec extends SparkSpecBase {
     assert(canon("http://a.com/p?a=1&&b=2") == Seq("http://a.com/p?a=1&&b=2"))
     assert(canon("http://a.com/p?utm_a=1&") == Seq("http://a.com/p"))
     assert(canon("http://a.com/p?gclid=x&gclid=y") == Seq("http://a.com/p"))
+    // the kernel equals the split + rlike filter + rejoin form it replaced,
+    // on the edge queries above and on generated ones
+    val regexForm = array_join(
+      filter(split(col("q"), "&"), p => !p.rlike("^(utm_[^&=]*|fbclid|gclid)=")), "&")
+    val edges = Seq("utm_nomatch&x=1", "utm_=1&x=1", "fbclidX=1", "fbclid=1",
+      "a=1&&b=2", "utm_a=1&", "gclid=x&gclid=y").toDF("q")
+    val generated = spark.range(2000).select(concat(
+      lit("utm_source=s"), (col("id") % 7L).cast("string"),
+      lit("&x="), (col("id") % 13L).cast("string"),
+      lit("&gclid=g&q="), col("id").cast("string"), lit("&utm_medium=m&y=2")).as("q"))
+    assert(edges.union(generated)
+      .where(TextExpressions.strip_tracking(col("q")) =!= regexForm).isEmpty)
   }
 
   test("canonicalization is idempotent") {

@@ -2,7 +2,8 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables, load the Spark result parquet, sort columns by
 name + rows, and compare values (exact for non-floats, exact-and-report for
-floats)."""
+floats). Exits nonzero unless every query in oracle_sql.json is OK; Verify
+writes that file for its SPARK_GRAFT_QUERIES subset only."""
 import sys, json, math
 import duckdb
 import pyarrow.parquet as pq
@@ -80,4 +81,5 @@ ok = sum(1 for v in results.values() if v == "OK")
 for k, v in sorted(results.items()):
     print(f"{k:24s} {v}")
 print(f"\n{ok}/{len(results)} oracle-checked queries OK")
-rows_only = set()  # queries without oracle
+# nonzero unless every checked query matched; checking none is no pass
+sys.exit(0 if results and ok == len(results) else 1)
