@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
   * FORMAT locale to ROOT, so `%f` in the JSON lines the mains print never
   * writes a decimal comma. Only FORMAT: with ROOT as the whole default
   * locale, Derby cannot create a database (the JDBC heuristics sink).
+  * Artifact isolation is off ([[shareCompiledCode]]).
   */
 object GraftSession {
 
@@ -29,6 +30,21 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    shareCompiledCode(spark)
     spark
   }
+
+  /** Let every session cloned from `spark` find the classes that earlier
+    * queries compiled. Each streaming query runs on a clone of its
+    * caller's session; with `spark.sql.artifact.isolation.enabled` on (the
+    * default) each clone gets its own artifact class loader, Spark's
+    * codegen cache is keyed on the class loader, and so every reader start
+    * recompiled its whole plan and the JIT warmed the new classes again.
+    * graft adds no artifacts (jars, files) to a session, so isolation
+    * guards nothing here. The setting is read when a session first runs a
+    * job: the factory sets it on a new session, and the reader entry
+    * points set it on their caller's session before the query clones it.
+    */
+  def shareCompiledCode(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
 }

@@ -105,12 +105,16 @@ object HeuristicsSink {
   /** Streaming flavor: results stream → JDBC per micro-batch, exactly the
     * reference's consume-and-insert loop with Spark's checkpointed
     * at-least-once semantics (duplicate tolerance is the same as the
-    * reference's replay-after-crash behavior).
+    * reference's replay-after-crash behavior). Like the other readers'
+    * entry points, it turns artifact isolation off on the caller's session
+    * ([[graft.GraftSession.shareCompiledCode]]).
     */
   def streamWriter(results: DataFrame, url: String, table: String = ResultTable,
                    user: String = "", password: String = "",
-                   driver: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] =
+                   driver: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] = {
+    graft.GraftSession.shareCompiledCode(results.sparkSession)
     results.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       writeResults(batch, url, table, user, password, driver)
     }
+  }
 }

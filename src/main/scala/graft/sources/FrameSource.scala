@@ -95,15 +95,22 @@ object FrameSource {
     * predicate below the projection), so non-matching rows never pay a
     * parse — the reference's lazy deserialization. Both decodes and the
     * struct flatten stay inside one whole-stage-codegen stage.
+    *
+    * Each row is decoded once. The decodes sit inside a one-row `inline`
+    * generator because the optimizer pushes a filter through a projection
+    * by substituting its aliases: over a plain `select`, the
+    * `_h/_b IS NOT NULL` drop below would run both decodes in the Filter
+    * and again in the Project. It cannot push a predicate on a
+    * generator's output below the generator.
     */
   def typedTable(frames: DataFrame, eventType: String): DataFrame = {
     import graft.functions.ProtoExpressions.proto_decode
     import graft.model.ProtoDescriptors
     frames.where(col("event_type") === eventType)
-      .select(
+      .select(inline(array(struct(
         proto_decode(col("header"), ProtoDescriptors.header).as("_h"),
         proto_decode(col("body"), ProtoDescriptors.byEventType(eventType)).as("_b"),
-        col("timestamp"), col("kafka_offset"), col("event_type"))
+        col("timestamp"), col("kafka_offset"), col("event_type")))))
       .where(col("_h").isNotNull && col("_b").isNotNull)
       .select(typedColumns(col("_h"), col("_b"), eventType) :+ col("event_type"): _*)
   }

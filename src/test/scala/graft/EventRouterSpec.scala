@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.{EventModel, ProtoDescriptors}
 import graft.sources.{EventTables, FrameSource}
@@ -199,5 +201,70 @@ class EventRouterSpec extends SparkSpecBase {
     EventRouter.routeBatch(b2, base, Seq("FS_EVENT", "GC_EVENT"))
     assert(spark.read.parquet(s"$base/FS_EVENT").count() == 2)
     assert(spark.read.parquet(s"$base/GC_EVENT").count() == 1)
+  }
+
+  /** Routed kafka offsets per type, each once per copy on disk. */
+  private def routedOffsets(base: String): Map[String, Seq[Long]] =
+    mixedTypes.map(t => t -> spark.read.parquet(s"$base/$t").select("kafka_offset").as[Long]
+      .collect().toSeq.sorted).toMap
+
+  /** The offsets of `mixedFrames` per type, `copies` times each. */
+  private def mixedOffsets(copies: Int): Map[String, Seq[Long]] =
+    mixedTypes.zipWithIndex.map { case (t, k) =>
+      t -> (0 until 24).filter(_ % 4 == k).flatMap(i => Seq.fill(copies)(i.toLong))
+    }.toMap
+
+  private def stagingLeft(base: String): Boolean =
+    new java.io.File(base).list().exists(_.startsWith("_staging"))
+
+  test("a replayed batch, after a full or a part-way commit, holds every row exactly once") {
+    val base = Files.createTempDirectory("router_replay").toString
+    val decoded = FrameSource.decodeFramesFast(mixedFrames, acceptedTypes = mixedTypes)
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    EventRouter.routeDecodedBatch(decoded, base, mixedTypes, "b1")
+    EventRouter.routeDecodedBatch(decoded, base, mixedTypes, "b2")
+    assert(routedOffsets(base) == mixedOffsets(2))
+    // replay after a full commit: b2 replaces its own files, b1 is untouched
+    EventRouter.routeDecodedBatch(decoded, base, mixedTypes, "b2")
+    assert(routedOffsets(base) == mixedOffsets(2))
+    assert(!stagingLeft(base))
+
+    // a commit that stops after three of its renames
+    val staged = EventRouter.stageBatch(decoded, base, mixedTypes, "b3")
+    assert(staged.size == 8, staged) // 4 types x 2 days, one writer
+    var renames = 3
+    val crashing = new FilterFileSystem(local) {
+      override def rename(src: Path, dst: Path): Boolean = {
+        if (renames == 0) throw new java.io.IOException("crash")
+        renames -= 1
+        super.rename(src, dst)
+      }
+    }
+    intercept[java.io.IOException](EventRouter.commitStaged(crashing, base, "b3", staged))
+    assert(stagingLeft(base))
+    val partial = routedOffsets(base).values.map(_.size).sum
+    assert(partial > 48 && partial < 72, partial)
+    // the retried batch completes it
+    EventRouter.routeDecodedBatch(decoded, base, mixedTypes, "b3")
+    assert(routedOffsets(base) == mixedOffsets(3))
+    assert(!stagingLeft(base))
+  }
+
+  test("routeTyped: a batch replayed from the checkpoint replaces its files") {
+    val work = Files.createTempDirectory("router_stream_replay").toString
+    mixedFrames.write.parquet(s"$work/in")
+    def run(): Unit = {
+      val raw = spark.readStream.schema(mixedFrames.schema).parquet(s"$work/in")
+      EventRouter.routeTyped(raw, s"$work/out", s"$work/ckpt", mixedTypes,
+        trigger = Trigger.AvailableNow(), monitorLag = false).start().awaitTermination()
+    }
+    run()
+    assert(routedOffsets(s"$work/out") == mixedOffsets(1))
+    // forget batch 0's commit: the restarted query routes it again
+    Seq("0", ".0.crc").foreach(f => new java.io.File(s"$work/ckpt/commits/$f").delete())
+    run()
+    assert(new java.io.File(s"$work/ckpt/commits/0").exists())
+    assert(routedOffsets(s"$work/out") == mixedOffsets(1))
+    assert(!stagingLeft(s"$work/out"))
   }
 }

@@ -53,6 +53,17 @@ class FrameSourceSpec extends SparkSpecBase {
     assert(out.select("event_type").as[String].collect().toSeq == Seq("GC_EVENT"))
   }
 
+  test("typedTable decodes each row's header and body once") {
+    import graft.functions.ProtoExpressions.ProtoDecode
+    // an RDD scan: over a local Seq the optimizer would fold the whole plan
+    val scanned = spark.sparkContext.parallelize(frames, 2).toDF("value", "offset")
+    val typed = FrameSource.typedTable(FrameSource.decodeFramesFast(scanned), "FS_EVENT")
+    val decodes = typed.queryExecution.optimizedPlan.collect { case node =>
+      node.expressions.flatMap(_.collect { case d: ProtoDecode => d })
+    }.flatten
+    assert(decodes.size == 2, typed.queryExecution.optimizedPlan)
+  }
+
   test("timestamp column restores event-time millis") {
     val ts = FrameSource.decodeFramesFast(raw).where(col("kafka_offset") === 10L)
       .select(unix_millis(col("timestamp"))).as[Long].head()

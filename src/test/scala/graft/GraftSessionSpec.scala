@@ -21,6 +21,7 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
       assert(spark.sparkContext.uiWebUrl.isEmpty)
+      assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
       assert(java.util.Locale.getDefault(java.util.Locale.Category.FORMAT) ==
         java.util.Locale.ROOT)
     } finally {
