@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * FORMAT locale to ROOT, so `%f` in the JSON lines the mains print never
   * writes a decimal comma. Only FORMAT: with ROOT as the whole default
   * locale, Derby cannot create a database (the JDBC heuristics sink).
-  * Artifact isolation is off ([[shareCompiledCode]]).
+  * Artifact isolation is off and the `file:` scheme is graft's fork-free
+  * local file system ([[configure]]).
   */
 object GraftSession {
 
@@ -30,21 +31,43 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    shareCompiledCode(spark)
+    configure(spark)
     spark
   }
 
-  /** Let every session cloned from `spark` find the classes that earlier
-    * queries compiled. Each streaming query runs on a clone of its
-    * caller's session; with `spark.sql.artifact.isolation.enabled` on (the
-    * default) each clone gets its own artifact class loader, Spark's
-    * codegen cache is keyed on the class loader, and so every reader start
-    * recompiled its whole plan and the JIT warmed the new classes again.
-    * graft adds no artifacts (jars, files) to a session, so isolation
-    * guards nothing here. The setting is read when a session first runs a
-    * job: the factory sets it on a new session, and the reader entry
-    * points set it on their caller's session before the query clones it.
+  /** Set, on `spark`'s own session conf, what every graft session and
+    * every streaming query cloned from it needs. This MUTATES the caller's
+    * session: the reader entry points ([[graft.streaming.EventRouter.routeTyped]],
+    * [[graft.streaming.EventSink.partitionedStreamWriter]],
+    * [[graft.serving.HeuristicsSink.streamWriter]]) call it on the session
+    * of the frame they are given, before the query clones that session, and
+    * the factory calls it on each session it builds.
+    *
+    *  - Artifact isolation off. With `spark.sql.artifact.isolation.enabled`
+    *    on (the default) each cloned session gets its own artifact class
+    *    loader, Spark's codegen cache is keyed on the class loader, and so
+    *    every reader start recompiled its whole plan and the JIT warmed the
+    *    new classes again. graft adds no artifacts (jars, files) to a
+    *    session, so isolation guards nothing here. The setting is read when
+    *    a session first runs a job.
+    *  - The `file:` scheme, for FileSystem and FileContext alike, is
+    *    [[ForkFreeLocalFileSystem]] / [[ForkFreeLocalFs]]: Hadoop's own
+    *    checksummed local file system except that it sets a new file's or
+    *    directory's permission from the JVM. Without libhadoop, Hadoop's own
+    *    forks `chmod` once per file and directory it creates, and a
+    *    reader batch creates dozens: checkpoint
+    *    logs, state-store deltas, sink and route files and their `.crc`s.
+    *    `sessionState.newHadoopConf()` carries the keys to the checkpoint,
+    *    the state store, the file sink and the route writer. Hadoop caches
+    *    one `file:` FileSystem per JVM whatever the conf says, so the
+    *    session's lookups bypass that cache and build a new instance each.
+    *    Code that takes its FS from `sparkContext.hadoopConfiguration`
+    *    still gets Hadoop's.
     */
-  def shareCompiledCode(spark: SparkSession): Unit =
+  def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    spark.conf.set("fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    spark.conf.set("fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
+  }
 }

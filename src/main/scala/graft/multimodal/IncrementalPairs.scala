@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -267,7 +268,7 @@ object IncrementalPairs {
   @volatile private[graft] var baseCacheMaxBytes: Long = DefaultBaseCacheMaxBytes
 
   private val baseCache = new java.util.LinkedHashMap[
-      String, (StructType, java.util.List[Row], Long)](16, 0.75f, true) {
+      String, (StructType, Broadcast[Array[Row]], Long)](16, 0.75f, true) {
     private def totalBytes: Long = {
       var t = 0L
       val it = values().iterator()
@@ -275,7 +276,7 @@ object IncrementalPairs {
       t
     }
     override def removeEldestEntry(
-        e: java.util.Map.Entry[String, (StructType, java.util.List[Row], Long)]): Boolean =
+        e: java.util.Map.Entry[String, (StructType, Broadcast[Array[Row]], Long)]): Boolean =
       false // eviction is explicit (evictOver) — size-many, not count-one
     def evictOver(budget: Long): Unit = {
       val it = entrySet().iterator()
@@ -290,15 +291,10 @@ object IncrementalPairs {
   /** ~bytes a cached filter holds on the driver: the bitset words
     * dominate; the per-row constant covers the Row + config fields.
     */
-  private def filterRowBytes(schema: StructType, rows: java.util.List[Row]): Long = {
+  private def filterRowBytes(schema: StructType, rows: Array[Row]): Long = {
     val wi = schema.fieldNames.indexOf("words")
-    var t = 0L
-    val it = rows.iterator()
-    while (it.hasNext) {
-      val r = it.next()
-      t += 128L + (if (wi >= 0 && !r.isNullAt(wi)) r.getSeq[Long](wi).length * 8L else 0L)
-    }
-    t
+    rows.iterator.map(r =>
+      128L + (if (wi >= 0 && !r.isNullAt(wi)) r.getSeq[Long](wi).length * 8L else 0L)).sum
   }
 
   /** Test seams: the cached gen paths (access order, eldest first) and
@@ -313,6 +309,15 @@ object IncrementalPairs {
     baseCache.values().asScala.map(_._3).sum
   }
 
+  /** The cached base of `path` as a DataFrame. Its rows reach the tasks
+    * through a broadcast variable: as a LocalRelation
+    * (`createDataFrame(rows, schema)`) they rode inside every task of
+    * every stage that scans the base — the probe's broadcast build, the
+    * config `distinct` and the fold's merge — ~1.2 MiB a task at the
+    * default geometry. The driver keeps the rows once, plus the
+    * broadcast's compressed serialized pieces; dropping the entry lets
+    * Spark's cleaner drop both once no plan holds the variable.
+    */
   private def cachedBase(spark: SparkSession, path: String): DataFrame = {
     val storePrefix = path.substring(0, path.lastIndexOf('/') + 1)
     val (schema, rows) = baseCache.synchronized {
@@ -325,14 +330,18 @@ object IncrementalPairs {
         case Some((s, r, _)) => (s, r)
         case None =>
           val df = spark.read.parquet(path)
-          val r = java.util.Arrays.asList(df.collect(): _*)
-          val entry = (df.schema, r, filterRowBytes(df.schema, r))
+          val r = df.collect()
+          val entry = (df.schema, spark.sparkContext.broadcast(r), filterRowBytes(df.schema, r))
           baseCache.put(path, entry)
           baseCache.evictOver(baseCacheMaxBytes)
-          (df.schema, r)
+          (entry._1, entry._2)
       }
     }
-    spark.createDataFrame(rows, schema)
+    val n = rows.value.length
+    // LocalTableScanExec's slicing: one row a task, at most a core's worth
+    val slices = math.min(math.max(n, 1), spark.sparkContext.defaultParallelism)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(0 until n, slices).map(i => rows.value(i)), schema)
   }
 
   /** The CURRENT seen-set state. Absent is legitimate only on a store

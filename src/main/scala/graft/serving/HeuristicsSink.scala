@@ -106,13 +106,14 @@ object HeuristicsSink {
     * reference's consume-and-insert loop with Spark's checkpointed
     * at-least-once semantics (duplicate tolerance is the same as the
     * reference's replay-after-crash behavior). Like the other readers'
-    * entry points, it turns artifact isolation off on the caller's session
-    * ([[graft.GraftSession.shareCompiledCode]]).
+    * entry points, it configures the caller's session
+    * ([[graft.GraftSession.configure]]): shared compiled code, and graft's
+    * fork-free local file system for the checkpoint and the state store.
     */
   def streamWriter(results: DataFrame, url: String, table: String = ResultTable,
                    user: String = "", password: String = "",
                    driver: Option[String] = None): DataStreamWriter[org.apache.spark.sql.Row] = {
-    graft.GraftSession.shareCompiledCode(results.sparkSession)
+    graft.GraftSession.configure(results.sparkSession)
     results.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       writeResults(batch, url, table, user, password, driver)
     }

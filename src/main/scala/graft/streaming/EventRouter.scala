@@ -64,11 +64,12 @@ object EventRouter {
     * renames, the retried batch replaces those files instead of adding
     * copies.
     *
-    * Starting the query turns artifact isolation off on the CALLER's
-    * session ([[GraftSession.shareCompiledCode]]): the query runs on a
-    * clone of it, and with isolation on each clone gets its own class
-    * loader, under which none of the code compiled for earlier queries is
-    * found. graft adds no artifacts, so nothing else changes.
+    * Starting the query configures the CALLER's session
+    * ([[GraftSession.configure]]), which the query then clones: artifact
+    * isolation goes off, so the query finds the code earlier queries
+    * compiled, and the `file:` scheme becomes graft's fork-free local file
+    * system, so its checkpoint logs, staged files and commit directories
+    * are created without forking `chmod`.
     *
     * @param types the event types to materialize (default: all known)
     * @param lateness watermark grace for the day-close markers
@@ -83,7 +84,7 @@ object EventRouter {
                  trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
                  monitorLag: Boolean = true)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
-    GraftSession.shareCompiledCode(raw.sparkSession)
+    GraftSession.configure(raw.sparkSession)
     if (monitorLag) IngestLagListener.forSession(raw.sparkSession)
     FrameSource.decodeFramesFast(raw, acceptedTypes = types)
       .withWatermark("timestamp", lateness)
@@ -129,7 +130,8 @@ object EventRouter {
                         batch: String): Unit = {
     if (types.isEmpty) return
     val spark = frames.sparkSession
-    val fs = new Path(basePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the session's conf, so graft's fork-free `file:` FS (`GraftSession.configure`)
+    val fs = new Path(basePath).getFileSystem(spark.sessionState.newHadoopConf())
     commitStaged(fs, basePath, batch, stageBatch(frames, basePath, types, batch))
   }
 

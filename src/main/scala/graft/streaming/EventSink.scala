@@ -46,16 +46,17 @@ object EventSink {
     * beyond-grace stragglers re-lists the partition (the reference's
     * consumers re-read the delayed path the same way).
     *
-    * Like [[EventRouter.routeTyped]], it turns artifact isolation off on
-    * the caller's session, so the query reuses the code earlier queries
-    * compiled ([[graft.GraftSession.shareCompiledCode]]).
+    * Like [[EventRouter.routeTyped]], it configures the caller's session
+    * ([[graft.GraftSession.configure]]): the query reuses the code earlier
+    * queries compiled, and its checkpoint and sink files are created
+    * through graft's fork-free local file system.
     */
   def partitionedStreamWriter(events: DataFrame, path: String, checkpoint: String,
                               lateness: String = "26 hours",
                               trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
                               monitorLag: Boolean = true)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
-    graft.GraftSession.shareCompiledCode(events.sparkSession)
+    graft.GraftSession.configure(events.sparkSession)
     // ST11 default-on: the session's shared lag listener rides every
     // production sink (the reference's footer stamps are not opt-in either)
     if (monitorLag) IngestLagListener.forSession(events.sparkSession)

@@ -23,6 +23,33 @@ class IncrementalPairsSpec extends SparkSpecBase {
   private def xxhash64SaltedLit(s: String): Long =
     spark.range(1).select(xxhash64(lit(1L), lit(s))).as[Long].head()
 
+  /** Run `body` and return the tasks Spark warned were over its 1 000 KiB
+    * recommendation (`TaskSetManager`: "contains a task of very large size").
+    */
+  private def largeTaskWarnings(body: => Unit): Seq[String] = {
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+    val collected = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+      "graft-task-size-probe", null, null, true,
+      org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(event: org.apache.logging.log4j.core.LogEvent): Unit = {
+        val msg = event.getMessage.getFormattedMessage
+        if (msg.contains("task of very large size")) collected.add(msg)
+      }
+    }
+    appender.start()
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, org.apache.logging.log4j.Level.WARN, null)
+    ctx.updateLoggers()
+    try { body; collected.toArray(Array.empty[String]).toSeq }
+    finally {
+      root.removeAppender("graft-task-size-probe")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   test("batch 2 pairs matching batch 1 history drop on the right leg; novel pairs admit; replay skips") {
     val root = java.nio.file.Files.createTempDirectory("incpairs_").toString
     val accepted = s"$root/accepted"
@@ -534,6 +561,22 @@ class IncrementalPairsSpec extends SparkSpecBase {
       assert(led("history_caption_dup") == 1, led.toString)
       assert(led("admitted") == 1, led.toString)
     } finally IncrementalPairs.baseCacheMaxBytes = budget0
+  }
+
+  test("probes through the cached caption base ship no task over 1 000 KiB") {
+    val root = java.nio.file.Files.createTempDirectory("incpairs_tasksize_").toString
+    val accepted = s"$root/accepted"
+    val warnings = largeTaskWarnings {
+      IncrementalPairs.processBatch(
+        Seq((1L, png(0), "task size caption one"), (2L, png(60), "task size caption two"))
+          .toDF("pair_id", "image", "caption"), 0L, root, accepted, cfg = cfg)
+      // batch 1 probes through batch 0's ~1 MB base filter, now cached
+      val led = IncrementalPairs.processBatch(
+        Seq((3L, png(120), "task size caption two"), (4L, png(180), "a novel caption here"))
+          .toDF("pair_id", "image", "caption"), 1L, root, accepted, cfg = cfg).toMap
+      assert(led("history_caption_dup") == 1 && led("admitted") == 1, led.toString)
+    }
+    assert(warnings.isEmpty, warnings.mkString("\n"))
   }
 
   test("release is nonce-confirmed: a lock reclaimed mid-run by another holder is NOT deleted on exit") {
