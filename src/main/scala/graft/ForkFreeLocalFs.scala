@@ -5,24 +5,34 @@ import java.nio.file.{FileSystems, Files}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSDataInputStream,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Hadoop's raw local file system except for `setPermission`, which sets
-  * the bits with `java.nio` instead of forking `chmod`.
+/** Hadoop's raw local file system except for the two calls that fork a
+  * process without libhadoop (`NativeIO.isAvailable()` false, as with the
+  * Hadoop that Spark ships):
   *
-  * Without libhadoop (`NativeIO.isAvailable()` false, as with the Hadoop
-  * that Spark ships), `RawLocalFileSystem.setPermission` runs
-  * `chmod <mode> <file>` through `Shell.execCommand`, and it is called for
-  * every file it creates (`LocalFSFileOutputStream`) and every directory
-  * (`mkOneDirWithMode`), each time with the umask already applied: one
-  * process fork per checkpoint log, state-store delta, Parquet file,
-  * `.crc` file and directory. The same bits set from the JVM need no
-  * process. The sticky bit has no `PosixFilePermission`, and a default
-  * file system without a POSIX view takes none, so those cases still go
-  * to Hadoop's own.
+  *  - `setPermission` runs `chmod <mode> <file>` through `Shell.execCommand`,
+  *    and it is called for every file it creates (`LocalFSFileOutputStream`)
+  *    and every directory (`mkOneDirWithMode`), each time with the umask
+  *    already applied: one fork per checkpoint log, state-store delta,
+  *    Parquet file, `.crc` file and directory. Here the same bits are set
+  *    from the JVM. The sticky bit has no `PosixFilePermission`, and a
+  *    default file system without a POSIX view takes none, so those cases
+  *    still go to Hadoop's own.
+  *  - `getFileLinkStatus` runs `readlink <path>` (`FileUtil.readLink`), and
+  *    every rename with options calls it, on the source and the target:
+  *    several forks per offset-log, commit-log and state-store commit. When
+  *    `readlink` prints nothing, Hadoop returns `getFileStatus(f)`, which
+  *    throws `FileNotFoundException` for a missing path. Here a path that
+  *    `java.nio` does not see as a symlink gets that answer directly; a
+  *    symlink, dangling or not, keeps Hadoop's own path, target
+  *    qualification and exceptions.
+  *
+  * Through FileContext, [[ForkFreeLocalFs]] also verifies `.crc` files on
+  * `open(path)`, not only on `open(path, bufferSize)`.
   */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
@@ -31,6 +41,10 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
     else
       Files.setPosixFilePermissions(pathToFile(p).toPath,
         ForkFreeRawLocalFileSystem.posixPermissions(permission.toShort))
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 object ForkFreeRawLocalFileSystem {
@@ -72,5 +86,13 @@ class ForkFreeRawLocalFs(uri: URI, conf: Configuration)
   * streaming checkpoint and state store write through FileContext.
   * Hadoop builds it by reflection through its (URI, Configuration)
   * constructor.
+  *
+  * `open(path)` verifies the `.crc` file. `ChecksumFs` verifies only in
+  * `open(path, bufferSize)`; it inherits `open(path)` from `FilterFs`,
+  * which goes straight to the raw file system, and that is the call Spark's
+  * checkpoint and state-store reads make. This one takes the buffer size
+  * from the server defaults, as `AbstractFileSystem.open(path)` does.
   */
-class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf))
+class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new ForkFreeRawLocalFs(uri, conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}

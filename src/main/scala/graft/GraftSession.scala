@@ -53,10 +53,13 @@ object GraftSession {
     *  - The `file:` scheme, for FileSystem and FileContext alike, is
     *    [[ForkFreeLocalFileSystem]] / [[ForkFreeLocalFs]]: Hadoop's own
     *    checksummed local file system except that it sets a new file's or
-    *    directory's permission from the JVM. Without libhadoop, Hadoop's own
-    *    forks `chmod` once per file and directory it creates, and a
-    *    reader batch creates dozens: checkpoint
+    *    directory's permission and stats a rename's source and target from
+    *    the JVM. Without libhadoop, Hadoop's own forks `chmod` once per file
+    *    and directory it creates and `readlink` for each of those stats, and
+    *    a reader batch creates and renames dozens of files: checkpoint
     *    logs, state-store deltas, sink and route files and their `.crc`s.
+    *    Its FileContext flavour also verifies `.crc` files on `open(path)`,
+    *    the call Spark's checkpoint and state-store reads make.
     *    `sessionState.newHadoopConf()` carries the keys to the checkpoint,
     *    the state store, the file sink and the route writer. Hadoop caches
     *    one `file:` FileSystem per JVM whatever the conf says, so the

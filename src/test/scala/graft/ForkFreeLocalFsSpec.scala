@@ -8,8 +8,8 @@ import java.util.EnumSet
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileSystem,
-  FSDataInputStream, LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileContext, FileStatus, FileSystem,
+  FSDataInputStream, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -108,9 +108,56 @@ class ForkFreeLocalFsSpec extends SparkSpecBase {
     fs.close()
     val fc = FileContext.getFileContext(conf("022", graft = true))
     val viaFc = new Path(dir, "fc.bin")
-    // ChecksumFs verifies on open(path, bufferSize) only: open(path) is
-    // FilterFs's, straight to the raw FS, for Hadoop's LocalFs as well
     corruptAndRead(viaFc, fc.create(viaFc, EnumSet.of(CreateFlag.CREATE)), fc.open(viaFc, 4096))
+    val viaFcOpen = new Path(dir, "fc_open.bin")
+    corruptAndRead(viaFcOpen, fc.create(viaFcOpen, EnumSet.of(CreateFlag.CREATE)), fc.open(viaFcOpen))
+  }
+
+  /** What a `FileStatus` shows a caller; `len` is 0 for a directory. */
+  private case class Link(path: String, len: Long, dir: Boolean, symlink: Boolean, target: String)
+
+  /** `status` as a [[Link]], or the class of what it throws. */
+  private def linkStatus(status: => FileStatus): Either[String, Link] =
+    try {
+      val s = status
+      Right(Link(s.getPath.toString, if (s.isDirectory) 0L else s.getLen, s.isDirectory, s.isSymlink,
+        if (s.isSymlink) s.getSymlink.toString else ""))
+    } catch { case e: java.io.IOException => Left(e.getClass.getName) }
+
+  test("getFileLinkStatus agrees with Hadoop's stock classes on files, dirs, symlinks and missing paths") {
+    val dir = Files.createTempDirectory("ffs_links")
+    Files.write(dir.resolve("file"), Array.fill[Byte](123)(1))
+    Files.createDirectory(dir.resolve("dir"))
+    Files.createSymbolicLink(dir.resolve("link"), dir.resolve("file"))
+    Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
+    def plain(name: String) = new Path(dir.resolve(name).toString)
+    def qualified(name: String) = new Path(dir.resolve(name).toUri)
+    // Hadoop hands `readlink` a scheme-less path as is and a qualified one as
+    // `file:/...`, where it finds no link: its answers for the two differ
+    val paths = Seq("file", "dir", "link", "dangling", "missing").flatMap(n => Seq(plain(n), qualified(n)))
+
+    def viaFs(raw: RawLocalFileSystem) = {
+      raw.initialize(root, conf("022", graft = false))
+      try paths.map(p => p.toString -> linkStatus(raw.getFileLinkStatus(p))) finally raw.close()
+    }
+    def viaFc(graft: Boolean) = {
+      val fc = FileContext.getFileContext(conf("022", graft))
+      paths.map(p => p.toString -> linkStatus(fc.getFileLinkStatus(p)))
+    }
+    val stockFs = viaFs(new RawLocalFileSystem)
+    assert(viaFs(new ForkFreeRawLocalFileSystem) == stockFs)
+    val stockFc = viaFc(graft = false)
+    assert(viaFc(graft = true) == stockFc)
+
+    // the cases differ: sizes and kinds, a symlink and its target, the exception
+    val fs = stockFs.toMap
+    val missing = Left(classOf[java.io.FileNotFoundException].getName)
+    assert(fs(plain("file").toString).exists(s => s.len == 123 && !s.dir && !s.symlink))
+    assert(fs(plain("dir").toString).exists(s => s.dir && !s.symlink))
+    assert(fs(plain("link").toString).exists(s => s.symlink && s.target == qualified("file").toString))
+    assert(fs(plain("dangling").toString).exists(s => s.symlink && s.target == qualified("gone").toString))
+    assert(fs(plain("missing").toString) == missing)
+    assert(stockFc.toMap.apply(qualified("missing").toString) == missing)
   }
 
   /** The classes `session`'s Hadoop conf resolves `file:` to. */
