@@ -3,6 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{MessageType, Type}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -266,5 +271,77 @@ class EventRouterSpec extends SparkSpecBase {
     assert(new java.io.File(s"$work/ckpt/commits/0").exists())
     assert(routedOffsets(s"$work/out") == mixedOffsets(1))
     assert(!stagingLeft(s"$work/out"))
+  }
+
+  /** The Parquet schema in the footer of the first data file under `dir`. */
+  private def footerSchema(dir: String): MessageType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val file = root.getFileSystem(conf).listFiles(root, true)
+    var found: Path = null
+    while (found == null && file.hasNext) {
+      val p = file.next().getPath
+      if (p.getName.startsWith("part-")) found = p
+    }
+    assert(found != null, s"no data file under $dir")
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(found, conf))
+    try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+  }
+
+  test("a routed file's Parquet schema is typedTable's as written by write.parquet") {
+    val decoded = FrameSource.decodeFramesFast(mixedFrames, acceptedTypes = mixedTypes)
+    mixedTypes.foreach { t =>
+      val written = Files.createTempDirectory("router_footer").toString + "/t"
+      FrameSource.typedTable(decoded, t).drop("event_type").write.parquet(written)
+      val expected = footerSchema(written)
+      // the wire offset is never null here: the spec then also pins nullability
+      assert(expected.getType(expected.getFieldIndex("kafka_offset"))
+        .isRepetition(Type.Repetition.REQUIRED), expected)
+      assert(footerSchema(s"$mixedBase/$t") == expected, t)
+    }
+  }
+
+  /** One batch of `frames` over the four mixed types, two input partitions. */
+  private def mixedBatch(frames: (Array[Byte], Long)*) =
+    spark.sparkContext.parallelize(frames, 2).toDF("value", "offset")
+
+  test("a batch whose present types differ from the last batch's compiles no class") {
+    val base = Files.createTempDirectory("router_codegen").toString
+    EventRouter.routeBatch(mixedBatch(fsFrame(day1, "READ", 1), gcFrame(day1, 3, 2)),
+      base, mixedTypes)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    EventRouter.routeBatch(mixedBatch(stateFrame(day2, "END", 3), memFrame(day2, 1f, 4)),
+      base, mixedTypes)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+    assert(spark.read.parquet(s"$base/STATE_EVENT").count() == 1)
+  }
+
+  test("a routed batch runs at most two jobs") {
+    val base = Files.createTempDirectory("router_jobs").toString
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("router-jobs", "route one batch")
+      EventRouter.routeBatch(mixedFrames, base, mixedTypes)
+      // the bus delivers events in order: once this job's start is seen,
+      // so are the route's
+      sc.setJobGroup("router-jobs-end", "listener fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("router-jobs-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains("router-jobs-end"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = groups.toArray.count(_ == "router-jobs")
+    assert(jobs >= 1 && jobs <= 2, jobs)
+    assert(routedOffsets(base) == mixedOffsets(1))
   }
 }

@@ -64,6 +64,20 @@ class FrameSourceSpec extends SparkSpecBase {
     assert(decodes.size == 2, typed.queryExecution.optimizedPlan)
   }
 
+  test("typedSchema is typedTable's schema, nullability and metadata included") {
+    val streamed = spark.readStream.schema("value BINARY, offset LONG")
+      .parquet(java.nio.file.Files.createTempDirectory("typed_schema").toString)
+    // a non-null offset, a nullable one, and a watermarked timestamp
+    Seq(FrameSource.decodeFramesFast(raw), FrameSource.decodeFramesFast(streamed),
+      FrameSource.decodeFramesFast(streamed).withWatermark("timestamp", "1 hour"))
+      .foreach { decoded =>
+        EventModel.typeMarkers.values.foreach { t =>
+          assert(FrameSource.typedSchema(decoded.schema, t) ==
+            FrameSource.typedTable(decoded, t).drop("event_type").schema, t)
+        }
+      }
+  }
+
   test("timestamp column restores event-time millis") {
     val ts = FrameSource.decodeFramesFast(raw).where(col("kafka_offset") === 10L)
       .select(unix_millis(col("timestamp"))).as[Long].head()
