@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
-import graft.operators.{KeyedHistory, Manifests}
+import graft.operators.{KeyedHistory, Manifests, StoreLock}
 
 /** STREAMING cross-modal pair curation — [[PairCuration.curatePairsAudited]]
   * per micro-batch, with admission AGAINST HISTORY: a pair survives only
@@ -71,17 +71,11 @@ import graft.operators.{KeyedHistory, Manifests}
   * checks, reclaimed by [[compactHistory]]). Single writer per root,
   * which foreachBatch guarantees — and which the store ENFORCES
   * against maintenance: batches and [[compactHistory]] both take the
-  * root's `.store_lock`, so maintenance racing a live batch is a loud
-  * failure, never a lost-history race. The lock carries the full
-  * [[graft.operators.SeenFilterStore]] liveness discipline — heartbeat
-  * mtime (long holders are never harvested), age-graced torn-lock
-  * reclaim with a nonce confirm, and writer-token reclaim for
-  * foreachBatch retries — but stays a separate instance rather than
-  * reusing SeenFilterStore's: this lock serializes TABLE SWAPS and
-  * multi-table appends plus the seen-set flip as one critical section,
-  * not just filter-generation flips, and its seen-set state (base
-  * filter + exact-key delta chain in one `_CURRENT`) is a shape
-  * SeenFilterStore does not model.
+  * root's `.store_lock` ([[StoreLock]], the lock
+  * [[graft.operators.SeenFilterStore]] takes too), so maintenance racing
+  * a live batch is a loud failure, never a lost-history race. The lock
+  * serializes table swaps, the multi-table appends and the seen-set flip
+  * as one critical section.
   */
 object IncrementalPairs {
 
@@ -111,23 +105,14 @@ object IncrementalPairs {
   /** pHash width is fixed: [[JdkMedia.phash64]]. */
   private val Bits = 64
 
-  /** A lock whose heartbeat mtime is younger than this is live; older is
-    * a crashed holder's torn lock, reclaimed with a nonce confirm. The
-    * holder heartbeats from a BACKGROUND daemon ([[withStoreLock]]) every
-    * [[HeartbeatMs]], so even an hours-long single Spark stage keeps the
-    * lock visibly live.
-    */
-  private val StaleLockMs = 60 * 60 * 1000L
-  private val HeartbeatMs = 60 * 1000L
-
   /** A foreachBatch retry of the SAME batch may reclaim its
     * predecessor's lock once the heartbeat has been silent this long —
     * long enough that a zombie driver (GC stall, network partition)
     * still heartbeating keeps its lock, short enough that a crashed
-    * driver's restart resumes in minutes instead of [[StaleLockMs]].
+    * driver's restart resumes in minutes instead of
+    * [[StoreLock.StaleMs]].
     */
   private val BatchRetryGraceMs = 3 * 60 * 1000L
-  private val ReclaimConfirmMs = 200L
 
   def committedBatchId(spark: SparkSession, root: String): Option[Long] =
     Manifests.read(spark, s"$root/$StateName")
@@ -516,174 +501,39 @@ object IncrementalPairs {
 
   // ----------------------------------------------------------- locking
 
-  /** Exclusive store lock (atomic create-no-overwrite; object stores
-    * without atomic create front this with conditional-put, same caveat
-    * as every rename committer). Batches AND maintenance take it, so a
-    * [[compactHistory]] racing a live batch fails loudly instead of
-    * swapping history out from under the batch's appends.
+  /** Run `body` holding the store's `.store_lock` ([[StoreLock]]).
+    * Batches and maintenance take it, so a [[compactHistory]] racing a
+    * live batch fails loudly instead of swapping history out from under
+    * the batch's appends. A batch's token
+    * is its id, so a retry of the same batch reclaims a dead attempt's
+    * lock after [[BatchRetryGraceMs]]; maintenance's token is empty.
     *
-    * Liveness is the lock file's MODIFICATION TIME, heartbeat-touched by
-    * a background daemon for the holder's whole critical section
-    * ([[withStoreLock]] — stage boundaries are not enough, a single
-    * corpus-scale stage can outlive the grace) — so a holder that
-    * legitimately outlives [[StaleLockMs]] is never harvested as torn
-    * (the write-once-timestamp flavor re-enabled the exact lost-history
-    * race the lock exists to prevent). Reclaim paths, both
-    * nonce-confirmed so two reclaimers racing cannot both win:
-    *
-    *  - mtime older than [[StaleLockMs]] — a crashed holder's torn lock;
-    *  - same `token` on a `batch` lock whose heartbeat has been quiet
-    *    past [[BatchRetryGraceMs]] — a foreachBatch RETRY of the same
-    *    micro-batch (the [[graft.operators.SeenFilterStore]]
-    *    writer-token discipline): a driver crash mid-batch stalls the
-    *    restarted stream for minutes, not the full stale grace, while a
-    *    ZOMBIE predecessor still heartbeating keeps its lock (two live
-    *    drivers can never both hold it).
+    * The mutual exclusion assumes a holder's stalls are bounded by the
+    * retry grace while its heartbeat lives: one that stops heartbeating
+    * AND stalls past the grace AND resumes mid-critical-section races
+    * the retry's appends until its next manifest check. Appends are
+    * at-least-once and flips are manifest-guarded, so the exposure is
+    * duplicate table rows, reclaimed by [[compactHistory]] — same as a
+    * crash replay.
     */
-  private def acquireLock(spark: SparkSession, root: String, kind: String,
-                          token: String = ""): (org.apache.hadoop.fs.Path, String) = {
-    val lock = new org.apache.hadoop.fs.Path(s"$root/$LockName")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root))
-    def tryCreate(nonce: String): Boolean =
-      try {
-        val out = fs.create(lock, false)
-        out.write(s"$kind $nonce token=$token\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    def readContent(): Option[String] =
-      try {
-        val in = fs.open(lock)
-        try {
-          val buf = new java.io.ByteArrayOutputStream(128)
-          val chunk = new Array[Byte](1024)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          Some(new String(buf.toByteArray,
-            java.nio.charset.StandardCharsets.UTF_8))
-        } finally in.close()
-      } catch { case _: java.io.IOException => None }
-    val nonce = java.util.UUID.randomUUID().toString
-    if (tryCreate(nonce)) return (lock, nonce)
-    val held = readContent().getOrElse("")
-    val heldParts = held.trim.split(" ")
-    val heldKind = heldParts.headOption.getOrElse("?")
-    val heldToken = heldParts.collectFirst {
-      case p if p.startsWith("token=") => p.stripPrefix("token=")
-    }.getOrElse("")
-    val mtimeAge =
-      try System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime
-      catch {
-        case _: java.io.FileNotFoundException =>
-          // the holder released between our create-fail and the stat:
-          // one clean retry, then loud contention
-          if (tryCreate(nonce)) return (lock, nonce)
-          throw new IllegalStateException(s"lock at $lock is contended — retry")
-        case e: java.io.IOException =>
-          // a transient stat fault is NOT evidence of a dead holder —
-          // reclaiming here would delete a live writer's lock
-          throw new IllegalStateException(
-            s"cannot stat pair-store lock $lock — refusing to judge " +
-              "liveness on a filesystem error; retry", e)
+  private def withStoreLock[T](spark: SparkSession, root: String,
+                               token: String = "")(body: => T): T =
+    StoreLock.withLock(spark, s"$root/$LockName", token, BatchRetryGraceMs) { r =>
+      val kind = r.holder match {
+        case Some("") => "maintenance"
+        case Some(_) => "batch"
+        case None => "unidentified"
       }
-    // a retry of the SAME batch may reclaim its provably-dead
-    // predecessor once its heartbeat has gone quiet past the retry
-    // grace — a ZOMBIE predecessor (GC stall, partition) still
-    // heartbeating keeps the lock, so two live drivers can never both
-    // hold it
-    val sameBatchRetry = kind == "batch" && heldKind == "batch" &&
-      token.nonEmpty && heldToken == token && mtimeAge >= BatchRetryGraceMs
-    if (mtimeAge < StaleLockMs && !sameBatchRetry)
-      throw new IllegalStateException(
-        s"$root is locked by a live '$heldKind' operation (last heartbeat " +
-          s"$mtimeAge ms ago) — the pair store is single-writer: run " +
-          "maintenance only while the stream is quiescent, and vice versa" +
-          (if (kind == "batch" && heldKind == "batch" && heldToken == token)
+      new IllegalStateException(
+        s"$root is locked by a live '$kind' operation (last heartbeat " +
+          s"${r.ageMs.fold("unknown")(a => s"$a ms")} ago) — the pair store " +
+          "is single-writer: run maintenance only while the stream is " +
+          "quiescent, and vice versa" +
+          (if (token.nonEmpty && r.holder.contains(token))
             s"; a retry of batch $token may proceed once the dead " +
               s"attempt's heartbeat is $BatchRetryGraceMs ms quiet"
           else ""))
-    // torn (crashed holder) or a provably-dead prior attempt of the SAME
-    // batch: reclaim with nonce confirm
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"reclaiming pair-store lock at $lock (content: '${held.trim}', " +
-        s"heartbeat age $mtimeAge ms, sameBatchRetry=$sameBatchRetry)")
-    fs.delete(lock, false)
-    if (!tryCreate(nonce))
-      throw new IllegalStateException(
-        s"lost the torn-lock reclaim race at $lock — retry")
-    Thread.sleep(ReclaimConfirmMs)
-    if (!readContent().exists(_.contains(nonce))) {
-      throw new IllegalStateException(
-        s"lost the torn-lock reclaim race at $lock (another reclaimer " +
-          "overwrote the lock during the confirm window) — retry")
-    }
-    (lock, nonce)
-  }
-
-  /** Run `body` holding the store lock with a BACKGROUND heartbeat
-    * daemon bumping the lock's mtime every [[HeartbeatMs]] — stage
-    * boundaries are not enough (a single corpus-scale Spark stage can
-    * outlive [[StaleLockMs]], and a mid-stage harvest is exactly the
-    * lost-history race the lock prevents). `setTimes` heartbeating needs
-    * a filesystem that honors it (HDFS/POSIX — the store's supported
-    * homes, same caveat as the lock's create-exclusive; an object store
-    * that no-ops setTimes degrades to the r13 write-once-age behavior).
-    *
-    * RELEASE IS NONCE-CONFIRMED: the finally re-reads the lock and
-    * deletes it only while it still carries THIS holder's nonce. A
-    * predecessor that stalled past [[BatchRetryGraceMs]] without
-    * heartbeating and then resumed after a retry reclaimed its lock
-    * would otherwise delete the NEW holder's lock on exit — briefly
-    * re-opening the two-writer window. (The mutual-exclusion guarantee
-    * itself assumes a holder's STALLS are bounded by the grace while the
-    * heartbeat daemon lives — a zombie that keeps heartbeating keeps its
-    * lock; one that stops AND stalls past the grace AND resumes
-    * mid-critical-section races the retry's appends until its next
-    * manifest/nonce check. Appends are at-least-once and flips are
-    * nonce/manifest-guarded, so the exposure is duplicate table rows,
-    * reclaimed by [[compactHistory]] — same as a crash replay.)
-    */
-  private def withStoreLock[T](spark: SparkSession, root: String,
-                               kind: String, token: String = "")(body: => T): T = {
-    val (lock, nonce) = acquireLock(spark, root, kind, token)
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val beat = new Thread(() => {
-      while (!stop.get()) {
-        try fs.setTimes(lock, System.currentTimeMillis(), -1)
-        catch { case _: java.io.IOException => () } // next beat retries
-        try Thread.sleep(HeartbeatMs)
-        catch { case _: InterruptedException =>
-          Thread.currentThread().interrupt(); stop.set(true) }
-      }
-    }, s"pair-store-lock-heartbeat-$kind")
-    beat.setDaemon(true)
-    beat.start()
-    try body
-    finally {
-      stop.set(true)
-      beat.interrupt()
-      beat.join(2000)
-      val stillOurs =
-        try {
-          val in = fs.open(lock)
-          try {
-            val buf = new Array[Byte](256)
-            val n = in.read(buf)
-            n > 0 && new String(buf, 0, n,
-              java.nio.charset.StandardCharsets.UTF_8).contains(nonce)
-          } finally in.close()
-        } catch { case _: java.io.IOException => false } // gone/unreadable: not ours
-      if (stillOurs) fs.delete(lock, false)
-      else org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"pair-store lock at $lock no longer carries this holder's nonce " +
-          "on release (reclaimed by a retry after a heartbeat stall?) — " +
-          "leaving it in place for its current holder")
-      ()
-    }
-  }
+    }(body)
 
   // ------------------------------------------------------ the batch path
 
@@ -708,7 +558,7 @@ object IncrementalPairs {
     // store a live compactHistory is mid-swap on would misdiagnose
     // healthy maintenance as corruption — under the lock every state
     // they can see is quiescent, so a failure there is real
-    withStoreLock(spark, root, "batch", token = batchId.toString) {
+    withStoreLock(spark, root, token = batchId.toString) {
       ensureLayout(spark, root, Layout(parts, cfg.maxHamming))
       // re-read under the lock (a reclaimed same-batch retry could in
       // principle follow a competing replay — single-writer makes this
@@ -963,7 +813,7 @@ object IncrementalPairs {
           "before maintenance")
       return 0L
     }
-    withStoreLock(spark, root, "maintenance") {
+    withStoreLock(spark, root) {
       // the high-water mark is sampled UNDER the lock, where the store is
       // provably quiescent (the same re-read-under-lock discipline as
       // processBatch): a pre-lock sample could miss a batch that
@@ -1066,7 +916,7 @@ object IncrementalPairs {
                    parts: Int = DefaultParts, maxHamming: Int = 1): Unit = {
     require(readLayout(spark, root).isEmpty,
       s"$root is already band-indexed ($LayoutName exists)")
-    withStoreLock(spark, root, "maintenance") {
+    withStoreLock(spark, root) {
       val path = new org.apache.hadoop.fs.Path(s"$root/history")
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val old = new org.apache.hadoop.fs.Path(s"$root/history.compact_old")

@@ -255,36 +255,15 @@ object SeenFilter {
   * [[recover]] to sweep).
   *
   * Single-writer is ENFORCED, not just contractual: [[appendBatch]]
-  * holds a create-exclusive `.append_lock` across its whole
-  * read→merge→flip (the protocol discipline of the incremental-dedup
-  * signature table's `.relayout_lock`,
-  * [[graft.streaming.IncrementalDedup]]). Without it, two concurrent
-  * appenders read the same `_CURRENT`, each OR-merges only its OWN
-  * batch, and the second flip silently DROPS the first batch's bits —
-  * membership loss, i.e. dup re-admission that no drift check would
-  * catch. A second writer now fails loudly instead; a crashed holder's
-  * lock is swept by [[recover]] age-graced.
-  *
-  * THE LOCK IS ONLY AS ATOMIC AS THE FILESYSTEM'S CREATE-EXCLUSIVE:
-  * `fs.create(path, overwrite = false)` is an atomic test-and-create on
-  * HDFS and local POSIX filesystems — the store's supported homes. On
-  * S3A-style object stores it is a non-atomic existence check followed
-  * by a PUT, so two racing writers can BOTH acquire; do not home the
-  * store there without fronting appends with a real coordination
-  * service (or a single-writer scheduler). Torn acquisitions are
-  * detectable: the holder's token+nonce lines are newline-terminated in
-  * the same close, so a crash between create() and close() leaves
-  * unterminated content — a PROVABLY torn lock (empty, or
-  * newline-bearing but unterminated) is reclaimable by any writer after
-  * a short grace ([[TornLockGraceMs]]) instead of blocking the store
-  * for the full [[recover]] grace; non-empty newline-LESS content is
-  * ambiguous (a pre-versioning release's complete lock looks exactly
-  * like that) and is never torn-reclaimed. The reclaim itself is
-  * arbitrated against stale-read racers by a fresh pre-delete
-  * re-judgment plus a [[ReclaimConfirmMs]] post-create confirm window
-  * on the nonce. A LIVE append refreshes the lock's mtime between its
-  * internal jobs, so [[recover]]'s age sweep does not harvest the lock
-  * of an append that merely runs long.
+  * holds the store's `.append_lock` ([[StoreLock]]) across its whole
+  * read→merge→flip. Without it, two concurrent appenders read the same
+  * `_CURRENT`, each OR-merges only its OWN batch, and the second flip
+  * silently DROPS the first batch's bits — membership loss, i.e. dup
+  * re-admission that no drift check would catch. A second writer fails
+  * loudly instead. A crashed holder's lock is reclaimed by the lock's
+  * own rules (torn, stale, or at once by a retry of the same micro-batch:
+  * this store's retry grace is 0, because Structured Streaming never runs
+  * one micro-batch twice at once) or swept by [[recover]] age-graced.
   */
 object SeenFilterStore {
 
@@ -293,25 +272,8 @@ object SeenFilterStore {
   val CurrentName = "_CURRENT"
   val AppendLockName = ".append_lock"
 
-  /** How old a TORN lock (created but never token-terminated — a crash
-    * between create() and close()) must be before any writer may reclaim
-    * it. The create→close window is one small metadata write, not a
-    * Spark job, so 30 s is generous; a lock with a complete token is
-    * never swept by this path.
-    */
-  val TornLockGraceMs: Long = 30 * 1000L
-
-  /** How long a torn-lock reclaimer holds its freshly created lock before
-    * the CONFIRMING nonce re-read declares acquisition. The delete+create
-    * reclaim is not atomic, and a racer acting on stale observations can
-    * delete a winner's live lock AFTER the winner's first nonce check
-    * passed — the confirm delay means both-proceed now requires the racer
-    * to stall longer than this between two ADJACENT filesystem metadata
-    * calls (its pre-delete re-judgment and its delete), the same
-    * bounded-stall assumption every lease-based lock rests on. Reclaim is
-    * a crash path; the latency is paid only there.
-    */
-  val ReclaimConfirmMs: Long = 2000L
+  /** How old a provably torn lock must be before any writer reclaims it. */
+  val TornLockGraceMs: Long = StoreLock.TornGraceMs
 
   private def stamp(): String =
     s"gen-${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}"
@@ -348,9 +310,18 @@ object SeenFilterStore {
     */
   def appendBatch(spark: SparkSession, root: String, batch: DataFrame,
                   textCol: String = "text",
-                  writerToken: Option[String] = None): DataFrame = {
-    val lock = acquireAppendLock(spark, root, writerToken)
-    try {
+                  writerToken: Option[String] = None): DataFrame =
+    StoreLock.withLock(spark, s"$root/$AppendLockName", writerToken.getOrElse(""),
+        retryGraceMs = 0L) { r =>
+      new IllegalArgumentException(
+        s"another appendBatch holds ${r.lock} — the seen-filter store is " +
+          "single-writer (a concurrent append would silently drop this " +
+          "batch's bits); wait for it, or run recover() if the holder crashed" +
+          (if (r.legacy) ". NOTE: the lock content is a pre-versioning " +
+            "bare token whose holder's liveness cannot be proven — if that " +
+            "writer is known dead, remove the lock manually or via " +
+            "recover()'s age sweep" else ""))
+    } {
       val cur = currentFilter(spark, root)
       val cfg = cur.select("seed", "k_hashes", "m_bits", "num_shards")
         .distinct().collect()
@@ -359,140 +330,11 @@ object SeenFilterStore {
       val (seed, k, m, sh) = (cfg(0).getLong(0), cfg(0).getInt(1),
         cfg(0).getInt(2), cfg(0).getInt(3))
       val marked = SeenFilter.markSeen(batch, cur, textCol).localCheckpoint()
-      // heartbeat between the append's internal jobs: a long mark or
-      // merge must not look crash-stale to recover()'s age sweep
-      touchLock(spark, lock)
       val merged = SeenFilter.mergeFilters(cur,
         SeenFilter.buildFilter(batch, textCol, seed, k, m, sh))
-      touchLock(spark, lock)
       writeGen(spark, root, merged)
       marked
-    } finally {
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(lock, false)
     }
-  }
-
-  private def touchLock(spark: SparkSession,
-                        lock: org.apache.hadoop.fs.Path): Unit = {
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.setTimes(lock, System.currentTimeMillis(), -1)
-    catch { case _: java.io.IOException => () } // best-effort heartbeat
-  }
-
-  /** Take the create-exclusive writer lock, or fail LOUDLY if another
-    * `appendBatch` holds it (see object doc for why a silent second
-    * writer loses bits). A lock left by a crash is age-swept by
-    * [[recover]]; the failure message says so.
-    *
-    * Lock content is `token\nnonce\n` — the token is the caller's
-    * identity, the nonce is unique per ACQUISITION ATTEMPT, and the
-    * final newline is the write-completed terminator (fewer than two
-    * terminated lines = the holder crashed between create() and
-    * close(): a TORN lock).
-    *
-    * `writerToken` is the RETRY escape hatch: an existing complete lock
-    * carrying the SAME non-empty token is reclaimed — a foreachBatch
-    * retry of micro-batch N can only run after its earlier attempt died
-    * (Structured Streaming never runs the same batch twice
-    * concurrently), so its own leftover lock must be crash residue, not
-    * a live writer. A torn lock older than [[TornLockGraceMs]] is
-    * reclaimable by ANY writer. Both reclaim paths are a
-    * delete-then-create with no atomicity between them, so after the
-    * create the acquirer RE-READS the lock and verifies its own nonce —
-    * two writers racing the same stale lock resolve to exactly one
-    * winner (the one whose create landed last; every earlier create was
-    * deleted by a later racer's delete, which its nonce check detects).
-    */
-  private def acquireAppendLock(spark: SparkSession, root: String,
-                                writerToken: Option[String]): org.apache.hadoop.fs.Path = {
-    val lock = new org.apache.hadoop.fs.Path(s"$root/$AppendLockName")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val token = writerToken.getOrElse("")
-    require(!token.contains("\n"), s"writer token cannot contain newlines: $token")
-    val nonce = java.util.UUID.randomUUID().toString
-    val payload = token + "\n" + nonce + "\n"
-    def tryCreate(): Boolean =
-      try {
-        val out = fs.create(lock, false)
-        out.write(payload.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-    def readContent(): Option[String] =
-      try {
-        val in = fs.open(lock)
-        val b = in.readAllBytes()
-        in.close()
-        Some(new String(b, java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case _: java.io.IOException => None }
-    def isComplete(c: String): Boolean =
-      c.endsWith("\n") && c.count(_ == '\n') >= 2
-    // PROVABLY torn under the current protocol: empty (create landed, no
-    // bytes) or newline-bearing but unterminated. Non-empty NEWLINE-LESS
-    // content is AMBIGUOUS — the pre-versioning release wrote complete
-    // locks as a bare token with no terminator, so "batch-3" could be a
-    // LIVE old-version writer, not crash residue; such locks are never
-    // torn-reclaimed (only the same-token retry path or recover()'s age
-    // sweep releases them — fail loudly otherwise).
-    def isProvablyTorn(c: String): Boolean =
-      c.isEmpty || (c.contains("\n") && !isComplete(c))
-    def isLegacyAmbiguous(c: String): Boolean = c.nonEmpty && !c.contains("\n")
-    def agedPastTearGrace(): Boolean =
-      try System.currentTimeMillis() -
-        fs.getFileStatus(lock).getModificationTime > TornLockGraceMs
-      catch { case _: java.io.IOException => false }
-    var acquired = tryCreate()
-    var sawLegacy = false
-    if (!acquired) {
-      val content = readContent()
-      sawLegacy = content.exists(isLegacyAmbiguous)
-      val sameToken = token.nonEmpty && content.exists(c =>
-        (isComplete(c) && c.takeWhile(_ != '\n') == token) ||
-          // legacy bare-token lock of OUR OWN token: the retry protocol
-          // (one attempt of a writer at a time) makes it reclaimable by
-          // its owner even though its liveness is unprovable
-          (isLegacyAmbiguous(c) && c == token))
-      val tornStale = content.exists(isProvablyTorn) && agedPastTearGrace()
-      if (sameToken || tornStale) {
-        // contemporaneous re-judgment IMMEDIATELY before the destructive
-        // delete: the reclaim race starts with a racer acting on reads
-        // taken before another reclaimer's delete+create completed — a
-        // fresh winner's lock is complete and seconds old, so re-reading
-        // here refuses it (the torn path; the same-token path is
-        // protocol-serialized and needs no re-check)
-        val freshOk = sameToken ||
-          (readContent().exists(isProvablyTorn) && agedPastTearGrace())
-        if (freshOk) {
-          fs.delete(lock, false)
-          if (tryCreate()) {
-            // the reclaim's delete+create is not atomic: verify OUR nonce
-            // survived — a racer's delete/create landing in between shows
-            // up as foreign content, and exactly one racer sees its own
-            acquired = readContent().contains(payload)
-            if (acquired && !sameToken) {
-              // arbitration delay (see ReclaimConfirmMs): hold, then
-              // confirm the nonce AGAIN — a stale-read racer that deletes
-              // our live lock inside the window is caught here, and for
-              // both to proceed it would have to stall longer than the
-              // delay between two adjacent metadata calls
-              Thread.sleep(ReclaimConfirmMs)
-              acquired = readContent().contains(payload)
-            }
-          }
-        }
-      }
-    }
-    require(acquired,
-      s"another appendBatch holds $lock — the seen-filter store is " +
-        "single-writer (a concurrent append would silently drop this " +
-        "batch's bits); wait for it, or run recover() if the holder crashed" +
-        (if (sawLegacy) ". NOTE: the lock content is a pre-versioning " +
-          "bare token whose holder's liveness cannot be proven — if that " +
-          "writer is known dead, remove the lock manually or via " +
-          "recover()'s age sweep" else ""))
-    lock
-  }
 
   /** Streaming admission: each micro-batch is marked against the CURRENT
     * generation, folded into a new published one, and the MARKED rows

@@ -416,20 +416,7 @@ object EventSink {
     }
     val dir = new org.apache.hadoop.fs.Path(s"$tablePath/$partPath")
     if (isStreamLogTracked(fs, tablePath)) return false
-    // exclusive per-partition lock (atomic create-no-overwrite on HDFS;
-    // object stores without atomic create should front this with their own
-    // conditional-put — same caveat as every rename-based committer
-    // there). The lock serializes manifest read-modify-write between
-    // compactors and sweepers of ONE partition; readers never take it.
-    val lockDir = new org.apache.hadoop.fs.Path(s"$tablePath/.compact_locks")
-    fs.mkdirs(lockDir)
-    // "_root" for the empty spec (unpartitioned table) — MUST match
-    // sweepCompacted's naming or compactor and sweeper stop excluding
-    // each other on that partition
-    val lock = new org.apache.hadoop.fs.Path(lockDir,
-      (if (partPath.isEmpty) "_root" else partPath.replace("/", "__")) + ".lock")
-    val locked = try fs.createNewFile(lock) catch { case _: java.io.IOException => false }
-    if (!locked) return false
+    val lock = tryPartitionLock(fs, tablePath, partPath).getOrElse(return false)
     var flipped = false
     var cleanupGarbage: () => Unit = () => ()
     try {
@@ -586,22 +573,37 @@ object EventSink {
     val root = new org.apache.hadoop.fs.Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Nil
-    val lockDir = new org.apache.hadoop.fs.Path(s"$tablePath/.compact_locks")
     dataDirs(fs, fs.makeQualified(root)).flatMap { partDir =>
       if (!readCompactionState(spark, partDir).exists(_.tombstones.nonEmpty)) Nil
       else {
         val rel = partDir.toString.stripPrefix(fs.makeQualified(root).toString)
           .stripPrefix("/")
-        fs.mkdirs(lockDir)
-        val lock = new org.apache.hadoop.fs.Path(lockDir,
-          (if (rel.isEmpty) "_root" else rel.replace("/", "__")) + ".lock")
-        val locked = try fs.createNewFile(lock) catch { case _: java.io.IOException => false }
-        if (!locked) Nil
-        else try sweepPartitionLocked(spark, fs, partDir, graceMs)
-          .map(n => new org.apache.hadoop.fs.Path(partDir, n).toString)
-        finally fs.delete(lock, false)
+        tryPartitionLock(fs, tablePath, rel).fold(Seq.empty[String]) { lock =>
+          try sweepPartitionLocked(spark, fs, partDir, graceMs)
+            .map(n => new org.apache.hadoop.fs.Path(partDir, n).toString)
+          finally fs.delete(lock, false)
+        }
       }
     }
+  }
+
+  /** Take the exclusive lock of partition `partPath` (table-relative; empty
+    * for an unpartitioned table), the one lock [[compactPartition]] and
+    * [[sweepCompacted]] both take: it serializes the manifest
+    * read-modify-write between compactors and sweepers of ONE partition;
+    * readers never take it. None when it is held. The lock is a
+    * create-exclusive file, atomic on HDFS; object stores without atomic
+    * create should front it with their own conditional-put, the same
+    * caveat as every rename-based committer there.
+    */
+  private def tryPartitionLock(fs: org.apache.hadoop.fs.FileSystem, tablePath: String,
+                               partPath: String): Option[org.apache.hadoop.fs.Path] = {
+    val lockDir = new org.apache.hadoop.fs.Path(s"$tablePath/.compact_locks")
+    fs.mkdirs(lockDir)
+    val lock = new org.apache.hadoop.fs.Path(lockDir,
+      (if (partPath.isEmpty) "_root" else partPath.replace("/", "__")) + ".lock")
+    val locked = try fs.createNewFile(lock) catch { case _: java.io.IOException => false }
+    if (locked) Some(lock) else None
   }
 
   /** Every dir under `root` (root included) that holds at least one

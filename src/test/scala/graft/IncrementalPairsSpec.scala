@@ -352,14 +352,14 @@ class IncrementalPairsSpec extends SparkSpecBase {
     // a live batch holds the lock (fresh timestamp): maintenance refuses
     val lockPath = java.nio.file.Paths.get(root, ".store_lock")
     java.nio.file.Files.write(lockPath,
-      s"batch ${System.currentTimeMillis()} test-nonce\n".getBytes)
+      "1\ntest-nonce\n".getBytes)
     val e = intercept[IllegalStateException] {
       IncrementalPairs.compactHistory(spark, root)
     }
     assert(e.getMessage.contains("single-writer"), e.getMessage)
     // and the reverse: a batch refuses while maintenance holds the lock
     java.nio.file.Files.write(lockPath,
-      s"maintenance ${System.currentTimeMillis()} test-nonce\n".getBytes)
+      "\ntest-nonce\n".getBytes)
     val e2 = intercept[IllegalStateException] {
       IncrementalPairs.processBatch(
         Seq((2L, png(50), "some new caption")).toDF("pair_id", "image", "caption"),
@@ -370,7 +370,7 @@ class IncrementalPairsSpec extends SparkSpecBase {
     // refuses (zombie protection: two live drivers can never both hold
     // the lock), naming the retry grace
     java.nio.file.Files.write(lockPath,
-      "batch dead-nonce token=1\n".getBytes)
+      "1\ndead-nonce\n".getBytes)
     val zombie = intercept[IllegalStateException] {
       IncrementalPairs.processBatch(
         Seq((2L, png(50), "some new caption")).toDF("pair_id", "image", "caption"),
@@ -391,7 +391,7 @@ class IncrementalPairsSpec extends SparkSpecBase {
 
     // a TORN lock (crashed holder: heartbeat mtime gone stale) is
     // reclaimed by ANY operation
-    java.nio.file.Files.write(lockPath, "batch dead-nonce token=99\n".getBytes)
+    java.nio.file.Files.write(lockPath, "99\ndead-nonce\n".getBytes)
     java.nio.file.Files.setLastModifiedTime(lockPath,
       java.nio.file.attribute.FileTime.fromMillis(12345L))
     val led2 = IncrementalPairs.processBatch(
@@ -604,9 +604,9 @@ class IncrementalPairsSpec extends SparkSpecBase {
       else new String(java.nio.file.Files.readAllBytes(lockPath))
     while (!holderLine.endsWith("\n") && System.currentTimeMillis() < deadline)
       Thread.sleep(5)
-    assert(holderLine.startsWith("batch "), s"lock never written: '$holderLine'")
+    assert(holderLine.startsWith("0\n"), s"lock never written: '$holderLine'")
     java.nio.file.Files.write(lockPath,
-      "batch foreign-nonce token=0\n".getBytes)
+      "0\nforeign-nonce\n".getBytes)
     val led = done.get(120, java.util.concurrent.TimeUnit.SECONDS)
     assert(led("admitted") == 1, led.toString)
     assert(java.nio.file.Files.exists(lockPath),

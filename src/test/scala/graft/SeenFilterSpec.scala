@@ -260,6 +260,43 @@ class SeenFilterSpec extends SparkSpecBase {
     java.nio.file.Files.delete(lockFile)
   }
 
+  test("release is nonce-confirmed: an append whose lock was reclaimed mid-run leaves the new holder's lock") {
+    import graft.operators.SeenFilterStore
+    val root = java.nio.file.Files.createTempDirectory("bloomsteal_").toString
+    SeenFilterStore.init(spark, root,
+      SeenFilter.buildFilter(docs.where(col("doc_id") % 2 === 0),
+        seed = 3L, kHashes = 5, mBits = 1 << 14, numShards = 4))
+    // the append's first job waits on the gate, so the lock is swapped
+    // while the append certainly still holds it
+    val gated = udf { (s: String) =>
+      SeenFilterSpec.appendGate.await(60, java.util.concurrent.TimeUnit.SECONDS); s
+    }
+    val batch = docs.where(col("doc_id") % 2 =!= 0).withColumn("text", gated(col("text")))
+    val lockFile = java.nio.file.Paths.get(root, SeenFilterStore.AppendLockName)
+    val done = new java.util.concurrent.CompletableFuture[Long]()
+    val t = new Thread(() => {
+      try done.complete(SeenFilterStore.appendBatch(spark, root, batch,
+        writerToken = Some("batch-5")).count())
+      catch { case e: Throwable => done.completeExceptionally(e) }
+    })
+    t.start()
+    def holder: String =
+      try new String(java.nio.file.Files.readAllBytes(lockFile), "UTF-8")
+      catch { case _: java.io.IOException => "" }
+    val deadline = System.currentTimeMillis() + 60000
+    while (holder.count(_ == '\n') < 2 && System.currentTimeMillis() < deadline)
+      Thread.sleep(5)
+    assert(holder.startsWith("batch-5\n"), s"lock never written: '$holder'")
+    // a retry that reclaimed the lock while this append stalled
+    java.nio.file.Files.write(lockFile, "batch-5\nforeign-nonce\n".getBytes("UTF-8"))
+    SeenFilterSpec.appendGate.countDown()
+    assert(done.get(120, java.util.concurrent.TimeUnit.SECONDS) > 0)
+    assert(java.nio.file.Files.exists(lockFile),
+      "release deleted a lock it no longer owned")
+    assert(holder == "batch-5\nforeign-nonce\n", holder)
+    java.nio.file.Files.delete(lockFile)
+  }
+
   test("admitStream: first micro-batch lands unseen, a replayed batch is fully seen; served bits carry both batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.operators.SeenFilterStore
@@ -335,4 +372,9 @@ class SeenFilterSpec extends SparkSpecBase {
     assert(marked.where(!col("maybe_seen")).isEmpty,
       "auto-sized filter must keep the no-false-negatives contract")
   }
+}
+
+object SeenFilterSpec {
+  /** Holds the gated append's first job until the test has swapped its lock. */
+  val appendGate = new java.util.concurrent.CountDownLatch(1)
 }
